@@ -127,7 +127,8 @@ def append_batch(spark: "SparkSession", path: str, batch: "DataFrame") -> bool:
     """Commit one append batch. Returns True on success, False when the
     optimistic commit lost a race (caller refreshes caches, re-runs the
     expected-revision CAS, and retries at the advanced tail) — the
-    Delta twin of ``EventLog._commit_batch``'s fence signal.
+    Delta twin of ``EventLog._fenced_write`` returning False when its
+    fence trips.
     """
     require_delta()
     if not DELTA_AVAILABLE:
@@ -203,8 +204,9 @@ def stream_source(spark: "SparkSession", path: str,
 
 def current_version(path: str) -> int:
     """Monotonic transaction-log version — the cross-process staleness
-    clock for ``format="delta"`` caches (the marker protocol's shared
-    watermark twin, ``store._read_watermark``). One directory listing on
+    clock ``EventLog._sync_caches`` reads for ``format="delta"`` caches
+    (the twin of the marker protocol's shared watermark,
+    ``store._read_watermark``). One directory listing on
     either backend: Delta's ``_delta_log/N.json`` commit files or the
     shim's ``_shim_log/N.json`` (log-retention expiry only ever REMOVES
     older versions, so the max stays monotonic). -1 = no table yet."""

@@ -133,18 +133,18 @@ class EventLog:
       read-modify-write, always published *before* markers at or below
       it are removed). A claimer whose position is at or below the
       watermark had a stale tail cache and releases its ghost claim.
-      On the first marker-mode append to a pre-existing log with no
-      watermark the current tail is backfilled, so stale caches are
-      fenced even for logs created before this protocol.
+      On the first append to a pre-existing log with no watermark (one
+      bootstrapped by ``from_dataframe``) the current tail is
+      backfilled, so stale caches are fenced on such logs too.
 
-    ``commit_protocol="none"`` turns the marker exchange off for
-    single-writer jobs where the extra file create per append is
-    measurable.
+    Head revisions, the tail, deletion markers and stream metadata are
+    read-through caches that hold for one reading of the commit clock
+    (the watermark, or the Delta version): ``_sync_caches`` drops them
+    all when the clock moves.
     """
 
     def __init__(self, spark: SparkSession, path: str, *,
                  format: str = "parquet",
-                 commit_protocol: str = "marker",
                  commit_grace_secs: float = 60.0):
         if format not in ("parquet", "delta"):
             raise ValueError(f"unsupported log format: {format!r}")
@@ -153,12 +153,12 @@ class EventLog:
             require_delta()
             # the Delta transaction log replaces the marker exchange
             # wholesale (see delta.py); no watermark/marker bookkeeping
-            commit_protocol = "delta"
         self.spark = spark
         self.path = path
         self.format = format
-        self._lock = threading.Lock()
-        self._commit_protocol = commit_protocol
+        # reentrant: _sync_caches takes it on the read path too, also
+        # from inside an append that already holds it
+        self._lock = threading.RLock()
         self._commit_grace = commit_grace_secs
         self._tail_position: Optional[int] = None  # lazily discovered
         self._revisions: dict[str, int] = {}  # stream -> head revision cache
@@ -166,8 +166,7 @@ class EventLog:
         self._deletions: Optional[dict[str, tuple]] = None
         # memoized local (stream, __del_before) frame derived from
         # _deletions — one createDataFrame per deletions epoch instead
-        # of one per resolve/scavenge call; invalidated everywhere the
-        # dict cache is (watermark fence, marker append)
+        # of one per resolve/scavenge call; dropped with the dict
         self._deletions_df: Optional[DataFrame] = None
         self._watermark_checked = False
         # stream -> metadata body (read-through; {} = no metadata)
@@ -175,16 +174,9 @@ class EventLog:
         # lazily discovered: does this log hold ANY $$-metadata stream?
         # (False short-circuits the per-read retention lookup entirely)
         self._has_meta_streams: Optional[bool] = None
-        # watermark snapshot the metadata caches were populated under;
-        # a moved watermark = another writer committed = caches stale
-        self._meta_cache_watermark: Optional[int] = None
-        # same fence for the head-revision/tail caches on the append
-        # path (see _refresh_log_caches)
-        self._log_cache_watermark: Optional[int] = None
-        # ... and for the deletion-marker cache (read through
-        # _load_deletions): a moved watermark may carry another
-        # process's delete/tombstone marker
-        self._deletions_watermark: Optional[int] = None
+        # commit-clock reading every cache above was populated under
+        # (see _sync_caches); None = not synced yet
+        self._cache_epoch: Optional[int] = None
         # fixed clock for $maxAge retention (tests/replays); None = now
         self.retention_clock = None
 
@@ -232,12 +224,13 @@ class EventLog:
     def _ensure_watermark(self) -> None:
         """Backfill the watermark on a pre-existing markerless log.
 
-        A log created before marker mode (or with protocol "none") has
-        no commit evidence at all; without this, a writer with a stale
-        cached tail could reserve a mid-log position unopposed. One
-        fresh tail read on the first marker-mode append closes it.
+        A log written without markers (bootstrapped by
+        ``from_dataframe``, or created before marker mode) has no commit
+        evidence at all; without this, a writer with a stale cached tail
+        could reserve a mid-log position unopposed. One fresh tail read
+        on the first append closes it.
         """
-        if self._watermark_checked or self._commit_protocol != "marker":
+        if self._watermark_checked or self.format == "delta":
             return
         if not os.path.exists(self._watermark_path()):
             self._tail_position = None
@@ -280,8 +273,6 @@ class EventLog:
         """Atomically claim ``position`` as the next append's first
         position. Returns the marker path, or None when another writer
         holds a live claim (caller refreshes and retries)."""
-        if self._commit_protocol != "marker":
-            return None
         import json as _json
 
         os.makedirs(self._commits_dir(), exist_ok=True)
@@ -473,121 +464,63 @@ class EventLog:
         if kind == ExpectedRevisionKind.REVISION and current != expected.revision:
             raise WrongExpectedRevisionError(stream, str(expected.revision), current)
 
-    def _refresh_log_caches(self) -> None:
-        """Cross-process staleness fence for the head-revision/tail
-        caches on the APPEND path. The CAS head read and the
-        position-reserve tail read are separate jobs; if another
-        process's commit becomes visible in between (or a cached head
-        outlives a fresh tail), the reserve can succeed at a fresh
-        position while the CAS verdict and revision numbering were
-        decided on stale data — two writers both 'win', violating the
-        dense-revision/CAS invariants. A moved shared watermark means
-        another writer committed: invalidate both caches. Commits not
-        yet watermarked still hold their position markers, so the
-        reserve itself serializes those (together with the
-        tail-before-head read ordering in append/append_multi this
-        closes every interleaving: a commit invisible to the tail read
-        blocks the reserve; one visible to it is visible to the later
-        head read too).
+    def _sync_caches(self) -> None:
+        """The one cross-process staleness rule. Every cache on this
+        instance (head revisions, tail, deletion markers, stream
+        metadata) holds for ``_cache_epoch``, one reading of the log's
+        commit clock: the shared watermark file for parquet logs, the
+        transaction-log version (``delta.current_version``, one
+        directory listing) under ``format="delta"``. A moved clock means
+        another writer committed — a new head, a delete/tombstone
+        marker or a metadata event these caches predate — so all of
+        them are dropped. Own commits move the epoch along in
+        ``_publish_rows`` when that is provably safe.
 
-        Under ``format="delta"`` the same interleaving exists with a
-        different clock: the position-overlap validation only rejects a
-        stale TAIL — a fresh tail combined with a stale per-stream HEAD
-        (this process appended elsewhere since caching it) would commit
-        duplicate (stream, revision) pairs unopposed. The transaction-log
-        version (one directory listing, ``delta.current_version``) is the
-        watermark's twin there."""
-        if self._commit_protocol == "marker":
-            clock = self._read_watermark()
-        elif self._commit_protocol == "delta":
-            from eventstorm_spark.log.delta import current_version
-            clock = current_version(self.path)
-        else:
-            return
-        if clock != self._log_cache_watermark:
-            self._log_cache_watermark = clock
+        On the append path the CAS head read and the position-reserve
+        tail read are separate jobs; if another process's commit
+        becomes visible in between (or a cached head outlives a fresh
+        tail), the reserve could succeed at a fresh position while the
+        CAS verdict and revision numbering were decided on stale data.
+        Commits not yet watermarked still hold their position markers,
+        so the reserve itself serializes those (together with the
+        tail-before-head read order in ``append_multi`` this closes
+        every interleaving: a commit invisible to the tail read blocks
+        the reserve; one visible to it is visible to the later head
+        reads too). Under delta the position-overlap validation only
+        rejects a stale tail, so the version clock is what keeps a stale
+        per-stream head from committing duplicate (stream, revision)
+        pairs.
+
+        Taken under ``_lock`` so a read-path drop never lands inside an
+        append: between its tail, head and CAS reads, or between its
+        publish and the write-through of the heads and tail it set."""
+        with self._lock:
+            if self.format == "delta":
+                from eventstorm_spark.log.delta import current_version
+                clock = current_version(self.path)
+            else:
+                clock = self._read_watermark()
+            if clock == self._cache_epoch:
+                return
+            self._cache_epoch = clock
             self._revisions.clear()
             self._tail_position = None
+            self._deletions = None
+            self._deletions_df = None
+            self._stream_meta.clear()
+            self._has_meta_streams = None
 
     def append(self, stream: str, events: Sequence[NewEvent],
                expected: ExpectedRevision = ExpectedRevision.any(),
                *, check_duplicates: bool = True) -> AppendResult:
-        """Transactional multi-event append — streams.go:125-189.
-
-        Serialized through the log lock (the single-writer section, SURVEY
-        §7.4): validates every event, runs the CAS, assigns dense per-stream
-        revisions and gapless global positions, stamps ``created`` ticks,
-        and commits one Parquet append. Returns first position + last
-        revision (streams.go:139-161).
-        """
-        if not events:
-            raise ValueError("append requires at least one event")
-        kind, _, _ = self._deletion_state(stream)
-        if kind == "tombstoned":
-            raise StreamDeletedError(stream)
-        for ev in events:
-            self._validate(ev)
-        seen: set[str] = set()
-        for ev in events:
-            if ev.uuid in seen:
-                raise ConflictError(f"duplicate uuid in batch: {ev.uuid}")
-            seen.add(ev.uuid)
-        import uuid as _uuid
-
-        with self._lock:
-            self._ensure_watermark()
-            attempts = 0
-            while True:
-                self._refresh_log_caches()
-                # tail BEFORE head (see _refresh_log_caches): a commit
-                # the tail read missed blocks our position reserve; one
-                # it saw is visible to the (strictly later) head read
-                base_pos = self.tail_position()
-                current, kind = self._effective_head(stream)
-                if kind == "tombstoned":
-                    # committed by another process since the fast-fail
-                    # check above (stale-cache fence in _load_deletions)
-                    raise StreamDeletedError(stream)
-                self._check_revision(expected, current, stream)
-                if check_duplicates and current is not None:
-                    uuids = [e.uuid for e in events]
-                    dup = (
-                        self.df().where((F.col("stream") == stream)
-                                        & F.col("uuid").isin(uuids))
-                        .limit(1).count()
-                    )
-                    if dup:
-                        raise ConflictError(f"duplicate uuid in stream {stream!r}")
-                base_rev = -1 if current is None else current
-                token = _uuid.uuid4().hex
-                marker = self._reserve(base_pos + 1, stream, len(events), token)
-                if marker is None and self._commit_protocol == "marker":
-                    # lost the optimistic race: another process committed
-                    # (or holds a live claim). Refresh tail + head caches
-                    # and re-validate the CAS against the advanced log.
-                    attempts += 1
-                    if attempts > 200:
-                        raise ConflictError(
-                            f"commit contention on {self.path!r} (position "
-                            f"{base_pos + 1} claimed and not released)")
-                    time.sleep(0.05)
-                    self._tail_position = None
-                    self._revisions.pop(stream, None)
-                    continue
-                result = self._commit_batch(
-                    stream, events, base_pos, base_rev, marker, token)
-                if result is not None:
-                    return result
-                # fence tripped: our claim was stolen during the data
-                # write (a pause beyond commit_grace_secs). Nothing was
-                # published — refresh and retry the whole CAS.
-                attempts += 1
-                if attempts > 200:
-                    raise ConflictError(
-                        f"commit contention on {self.path!r} (claim at "
-                        f"position {base_pos + 1} repeatedly stolen)")
-                self._tail_position = None
-                self._revisions.pop(stream, None)
+        """Transactional multi-event append — streams.go:125-189: a
+        one-request :meth:`append_multi`. Validates every event, runs
+        the CAS, assigns dense per-stream revisions and gapless global
+        positions, stamps ``created`` ticks, and commits one Parquet
+        append. Returns first position + last revision
+        (streams.go:139-161)."""
+        return self.append_multi([(stream, events, expected)],
+                                 check_duplicates=check_duplicates)[0]
 
     def append_multi(
         self,
@@ -608,6 +541,10 @@ class EventLog:
         dense (a stream appearing twice in the batch continues its own
         numbering), and throughput scales with total batch size — N
         streams cost one commit, not N (SCALE.md §2).
+
+        Serialized through the log lock (the single-writer section,
+        SURVEY §7.4); across processes the position reserve is the
+        optimistic commit (see the class docstring).
         """
         if not requests:
             raise ValueError("append_multi requires at least one request")
@@ -629,175 +566,133 @@ class EventLog:
                     raise ConflictError(
                         f"duplicate uuid in batch for stream {stream!r}: {ev.uuid}")
                 seen.add(key)
+        total = sum(len(events) for _, events, _ in requests)
+        marker_stream = requests[0][0] if len(requests) == 1 else "$multi"
 
         with self._lock:
             self._ensure_watermark()
-            attempts = 0
-            while True:
-                self._refresh_log_caches()
-                # tail BEFORE the heads (see _refresh_log_caches): a
-                # commit the tail read missed blocks the reserve; one
-                # it saw is visible to the later head reads
+            for _ in range(200):
+                self._sync_caches()
+                # tail BEFORE the heads (see _sync_caches): a commit the
+                # tail read missed blocks the reserve; one it saw is
+                # visible to the later head reads
                 base_pos = self.tail_position()
                 # CAS every stream against its live head BEFORE writing
-                # anything; batch-internal continuation for repeated
-                # streams (second request sees the first's revisions).
+                # anything (a failure raises: nothing written);
+                # batch-internal continuation for repeated streams (the
+                # second request sees the first's revisions)
                 heads: dict[str, int] = {}
-                failed = None
+                firsts: list[int] = []  # head before each request
                 for stream, events, expected in requests:
                     if stream not in heads:
                         cur, kind = self._effective_head(stream)
                         if kind == "tombstoned":
                             raise StreamDeletedError(stream)
                         heads[stream] = -1 if cur is None else cur
-                        cur_for_check = cur
-                    else:
-                        cur_for_check = heads[stream] if heads[stream] >= 0 else None
-                    try:
-                        self._check_revision(expected, cur_for_check, stream)
-                    except WrongExpectedRevisionError as exc:
-                        failed = exc
-                        break
-                    if check_duplicates and cur_for_check is not None:
+                    cur = heads[stream] if heads[stream] >= 0 else None
+                    self._check_revision(expected, cur, stream)
+                    if check_duplicates and cur is not None:
                         uuids = [e.uuid for e in events]
                         if (self.df().where((F.col("stream") == stream)
                                             & F.col("uuid").isin(uuids))
                                 .limit(1).count()):
                             raise ConflictError(
                                 f"duplicate uuid in stream {stream!r}")
+                    firsts.append(heads[stream])
                     heads[stream] += len(events)
-                if failed is not None:
-                    raise failed  # atomic rejection: nothing written
 
-                total = sum(len(events) for _, events, _ in requests)
                 token = _uuid.uuid4().hex
-                marker = self._reserve(base_pos + 1, "$multi", total, token)
-                if marker is None and self._commit_protocol == "marker":
-                    attempts += 1
-                    if attempts > 200:
-                        raise ConflictError(
-                            f"commit contention on {self.path!r} (position "
-                            f"{base_pos + 1} claimed and not released)")
-                    time.sleep(0.05)
-                    self._tail_position = None
-                    self._revisions.clear()
-                    continue
+                marker = None
+                if self.format != "delta":
+                    marker = self._reserve(base_pos + 1, marker_stream,
+                                           total, token)
+                    if marker is None:
+                        # lost the optimistic race: another process
+                        # committed (or holds a live claim); re-validate
+                        # the CAS against the advanced log
+                        time.sleep(0.05)
+                        self._cache_epoch = None
+                        continue
 
                 ticks = _now_ticks()
                 rows: list = []
                 results: list[AppendResult] = []
-                revs: dict[str, int] = {}
                 pos = base_pos
-                for stream, events, _ in requests:
-                    if stream not in revs:
-                        cur, _kind = self._effective_head(stream)
-                        revs[stream] = -1 if cur is None else cur
-                    first_position = pos + 1
+                for (stream, events, _), rev in zip(requests, firsts):
+                    results.append(AppendResult(
+                        stream=stream, first_position=pos + 1,
+                        last_revision=rev + len(events), count=len(events)))
                     for ev in events:
                         meta = dict(ev.metadata)
                         meta[META_TYPE] = ev.event_type
                         meta[META_CONTENT_TYPE] = ev.content_type
                         meta[META_CREATED] = str(ticks)
-                        revs[stream] += 1
+                        rev += 1
                         pos += 1
                         rows.append((stream, ev.uuid, ev.data, meta,
-                                     ev.custom_metadata, revs[stream], pos,
+                                     ev.custom_metadata, rev, pos,
                                      ev.event_type, ev.content_type, ticks))
-                    results.append(AppendResult(
-                        stream=stream, first_position=first_position,
-                        last_revision=revs[stream], count=len(events)))
 
-                if self._publish_rows(rows, base_pos, total, marker, token):
-                    self._revisions.update(revs)
-                    self._tail_position = base_pos + total
+                if self._publish_rows(rows, base_pos, marker, token):
+                    self._revisions.update(heads)
+                    self._tail_position = pos
                     return results
-                # lost race / fence tripped: refresh and redo the CAS
-                attempts += 1
-                if attempts > 200:
-                    raise ConflictError(
-                        f"commit contention on {self.path!r} (claim at "
-                        f"position {base_pos + 1} repeatedly stolen)")
-                self._tail_position = None
-                self._revisions.clear()
+                # lost the Delta race, or the fence tripped (our claim
+                # was stolen during a pause beyond commit_grace_secs):
+                # nothing was published — refresh and redo the CAS
+                self._cache_epoch = None
+            raise ConflictError(
+                f"commit contention on {self.path!r} (position "
+                f"{base_pos + 1} claimed, stolen or lost 200 times)")
 
-    def _publish_rows(self, rows: list, base_pos: int, n: int,
+    def _publish_rows(self, rows: list, base_pos: int,
                       marker: Optional[str], token: str) -> bool:
         """Publish assembled envelope rows through the format's commit
-        path (Delta optimistic merge / direct append / fenced staged
-        write + watermark). False = lost race or fence tripped; nothing
-        published, caller retries its CAS."""
+        path (Delta optimistic merge / fenced staged write + watermark),
+        then drop the caches the batch itself stales. False = lost race
+        or fence tripped; nothing published, caller retries its CAS.
+        Runs under ``_lock``."""
         batch = local_frame(self.spark, rows, EVENT_SCHEMA)
         if self.format == "delta":
             from eventstorm_spark.log import delta as _delta
-            return _delta.append_batch(self.spark, self.path, batch)
-        if marker is None:
-            # protocol "none": single-writer fast path, direct append
-            batch.write.mode("append").parquet(self.path)
-            return True
-        if not self._fenced_write(batch, marker, token):
-            return False
-        # published: advertise the watermark FIRST, then GC markers at
-        # or below it (ours included — the watermark now carries the
-        # commit evidence).
-        prev_wm = self._read_watermark()
-        wm = self._advance_watermark(base_pos + n)
-        if (wm == base_pos + n and prev_wm == self._log_cache_watermark
-                and base_pos == prev_wm):
-            # Single-writer fast path: move the staleness fences with
-            # our own commit so the head/tail caches the caller is
-            # about to write survive the next _refresh_* (otherwise
-            # every append pays a full-log max(position)+max(revision)
-            # rescan of the caches it just set). The fence may ONLY
-            # advance when our caches provably cover everything below
-            # the new watermark, i.e. the only commit since they were
-            # populated is ours: (a) the pre-advance watermark still
-            # equals our fence (no foreign commit ADVERTISED since our
-            # refresh), AND (b) our base position equals it (no foreign
-            # commit PUBLISHED-but-unadvertised below us — a stalled
-            # writer's rows are visible to the tail read before its
-            # watermark moves, and advancing our fence past such rows
-            # would freeze a stale head cache forever: duplicate
-            # revisions / wrongly-passing CAS). Either condition
-            # failing leaves the fence behind and the next refresh
-            # invalidates, which is always safe. The meta fence
-            # additionally requires this batch wrote no $$-metadata
-            # stream (set_stream_metadata writes through; a raw
-            # $$-append must stay invalidatable).
-            self._log_cache_watermark = wm
-            if not any(r[0].startswith("$$") for r in rows):
-                self._meta_cache_watermark = wm
-        self._gc_markers(wm)
+            if not _delta.append_batch(self.spark, self.path, batch):
+                return False
+        else:
+            if not self._fenced_write(batch, marker, token):
+                return False
+            # published: advertise the watermark FIRST, then GC markers
+            # at or below it (ours included — the watermark now carries
+            # the commit evidence).
+            top = base_pos + len(rows)
+            prev_wm = self._read_watermark()
+            wm = self._advance_watermark(top)
+            if wm == top and prev_wm == base_pos == self._cache_epoch:
+                # Own commit: move the epoch with it so the caches the
+                # caller is about to write survive the next sync
+                # (otherwise every append pays full-log rescans of the
+                # caches it just set). Only when our caches provably
+                # cover everything below the new watermark: (a) the
+                # pre-advance watermark still equals our epoch (no
+                # foreign commit ADVERTISED since the sync), AND (b)
+                # our base position equals it (no foreign commit
+                # PUBLISHED-but-unadvertised below us — a stalled
+                # writer's rows are visible to the tail read before its
+                # watermark moves, and an epoch past such rows would
+                # freeze a stale head cache forever: duplicate
+                # revisions / wrongly-passing CAS). Otherwise the epoch
+                # stays behind and the next sync drops every cache,
+                # which is always safe. Delta commits never move it:
+                # the next sync re-reads after every one.
+                self._cache_epoch = wm
+            self._gc_markers(wm)
+        streams = {r[0] for r in rows}
+        if DELETED_STREAMS in streams:
+            self._deletions = None
+            self._deletions_df = None
+        if any(s.startswith("$$") for s in streams):
+            self._stream_meta.clear()
+            self._has_meta_streams = None
         return True
-
-    def _commit_batch(self, stream: str, events: Sequence[NewEvent],
-                      base_pos: int, base_rev: int,
-                      marker: Optional[str], token: str) -> Optional[AppendResult]:
-        """Write the batch and publish it. Returns None when the fence
-        tripped (claim stolen mid-write; nothing published)."""
-        ticks = _now_ticks()
-        rows = []
-        for i, ev in enumerate(events):
-            meta = dict(ev.metadata)
-            meta[META_TYPE] = ev.event_type
-            meta[META_CONTENT_TYPE] = ev.content_type
-            meta[META_CREATED] = str(ticks)
-            rows.append(
-                (
-                    stream, ev.uuid, ev.data, meta, ev.custom_metadata,
-                    base_rev + 1 + i, base_pos + 1 + i,
-                    ev.event_type, ev.content_type, ticks,
-                )
-            )
-        if not self._publish_rows(rows, base_pos, len(events), marker, token):
-            return None  # lost race / fence tripped; nothing published
-        self._revisions[stream] = base_rev + len(events)
-        self._tail_position = base_pos + len(events)
-        return AppendResult(
-            stream=stream,
-            first_position=base_pos + 1,
-            last_revision=base_rev + len(events),
-            count=len(events),
-        )
 
     # -- deletion (S9 — stubs in the reference, grpc_server.go:271-281) ---
 
@@ -805,30 +700,12 @@ class EventLog:
         """Deletion markers, folded to per-stream state: tombstone wins,
         else the latest (max before_position) soft delete.
 
-        Cross-process staleness fence (marker protocol): a moved shared
-        watermark means another writer committed — possibly a
-        delete/tombstone marker this process's cache predates, which
-        would let appends land on a tombstoned stream and reads keep
-        serving soft-deleted events. The watermark read is one local
-        file stat, so the check is cheap enough for every lookup."""
-        if self._commit_protocol == "marker":
-            wm = self._read_watermark()
-            if wm != self._deletions_watermark:
-                self._deletions_watermark = wm
-                self._deletions = None
-                self._deletions_df = None
-        elif self._commit_protocol == "delta":
-            # Same fence, delta clock: the transaction-log version moves
-            # on every cross-process commit (delete markers included),
-            # and reading it is one directory listing — without this the
-            # deletions cache was sticky per instance under
-            # format="delta" while marker mode re-read correctly.
-            from eventstorm_spark.log.delta import current_version
-            v = current_version(self.path)
-            if v != self._deletions_watermark:
-                self._deletions_watermark = v
-                self._deletions = None
-                self._deletions_df = None
+        Checked through ``_sync_caches`` on every lookup: another
+        writer's delete/tombstone marker this cache predates would
+        otherwise let appends land on a tombstoned stream and reads keep
+        serving soft-deleted events. The clock read is one local file
+        read (or directory listing), cheap enough for every lookup."""
+        self._sync_caches()
         if self._deletions is not None:
             return self._deletions
         import json as _json
@@ -896,8 +773,8 @@ class EventLog:
         revision numbering continues from the pre-delete head
         (EventStoreDB recreation semantics). The single home for the
         continuation rule used by append, append_multi and
-        delete_stream; also re-reads deletion state through the
-        watermark fence, so a tombstone committed by another process
+        delete_stream; also re-reads deletion state through
+        ``_sync_caches``, so a tombstone committed by another process
         since a caller's fast-fail check is still seen."""
         current = self.head_revision(stream)
         kind, _, last_rev = self._deletion_state(stream)
@@ -941,10 +818,7 @@ class EventLog:
                 "last_revision": -1 if current is None else current,
             }),
         )
-        res = self.append(DELETED_STREAMS, [marker], check_duplicates=False)
-        self._deletions = None
-        self._deletions_df = None
-        return res
+        return self.append(DELETED_STREAMS, [marker], check_duplicates=False)
 
     def tombstone_stream(self, stream: str,
                          expected: ExpectedRevision = ExpectedRevision.any()) -> AppendResult:
@@ -1039,31 +913,23 @@ class EventLog:
         self._has_meta_streams = True
         return res
 
-    def _refresh_meta_caches(self) -> None:
-        """Cross-process staleness fence for the retention caches.
-        Another process's commit advances the shared watermark file —
-        the same signal the append path's ``_reserve`` uses to detect a
-        stale tail cache — so a moved watermark invalidates
-        ``_stream_meta``/``_has_meta_streams`` before they are consulted
-        (metadata set by a second writer instance becomes visible to
-        this instance's reads and ``$all`` retention). Non-marker
-        protocols have no shared watermark; there the caches carry
-        single-writer-instance semantics by design (one cheap local
-        file stat per lookup is the whole cost of the fence)."""
-        if self._commit_protocol != "marker":
-            return
-        wm = self._read_watermark()
-        if wm != self._meta_cache_watermark:
-            self._meta_cache_watermark = wm
-            self._stream_meta.clear()
-            self._has_meta_streams = None
+    def _any_meta_streams(self) -> bool:
+        """Does this log hold ANY ``$$``-metadata stream? One bounded
+        probe per cache epoch; False short-circuits every retention
+        lookup."""
+        self._sync_caches()
+        if self._has_meta_streams is None:
+            self._has_meta_streams = bool(
+                self.df().where(F.col("stream").startswith("$$"))
+                .limit(1).collect())
+        return self._has_meta_streams
 
     def get_stream_metadata(self, stream: str) -> dict:
         """Current metadata body for ``stream`` ({} when none set) —
         the last event of ``$$<stream>``, read-through cached."""
         import json as _json
 
-        self._refresh_meta_caches()
+        self._sync_caches()
         if stream in self._stream_meta:
             return dict(self._stream_meta[stream])
         rows = (self.df().where(F.col("stream") == f"$${stream}")
@@ -1094,17 +960,12 @@ class EventLog:
         """Filter ``sid``'s out-of-retention events from the base frame
         BEFORE the read plan compiles, so boundaries/limits see only
         retained events (the soft-delete pattern). Cost guard: the
-        metadata lookup short-circuits on a one-time has-any-``$$``
-        check, so logs without metadata streams pay one bounded probe
-        per EventLog instance, ever."""
+        metadata lookup short-circuits on a has-any-``$$`` check, so
+        logs without metadata streams pay one bounded probe per cache
+        epoch (``_any_meta_streams``)."""
         if sid.startswith("$$"):
             return df  # metadata streams are never retention-filtered
-        self._refresh_meta_caches()
-        if self._has_meta_streams is None:
-            self._has_meta_streams = bool(
-                self.df().where(F.col("stream").startswith("$$"))
-                .limit(1).collect())
-        if not self._has_meta_streams:
+        if not self._any_meta_streams():
             return df
         meta = self.get_stream_metadata(sid)
         if not meta:
@@ -1133,12 +994,7 @@ class EventLog:
         is only paid when metadata streams exist at all."""
         import json as _json
 
-        self._refresh_meta_caches()
-        if self._has_meta_streams is None:
-            self._has_meta_streams = bool(
-                self.df().where(F.col("stream").startswith("$$"))
-                .limit(1).collect())
-        if not self._has_meta_streams:
+        if not self._any_meta_streams():
             return None
         meta_rows = (self.df()
                      .where(F.col("stream").startswith("$$"))
@@ -1331,7 +1187,7 @@ class EventLog:
             # $all reads honor retention too: one broadcast join against
             # the (metadata-stream-count)-sized retention table — the
             # corpus never shuffles, and logs without metadata skip this
-            # entirely (single has-any probe per instance).
+            # entirely (one has-any probe per cache epoch).
             rt = self._retention_frame()
             rt_for_resolution = rt  # reuse below; rebuilding = 2 collects
             if rt is not None:
@@ -1461,8 +1317,6 @@ class EventLog:
     def _restore_watermark_after_rewrite(self) -> None:
         """A directory-overwrite rewrite (compact/scavenge) destroys
         ``_commits/`` and with it the watermark; re-backfill it from the
-        freshly-read tail so stale-cache fences keep working."""
-        if self._commit_protocol != "marker":
-            return
+        freshly-read tail so the cache epoch keeps working."""
         self._watermark_checked = False
         self._ensure_watermark()

@@ -165,17 +165,19 @@ def _append_links(log, name: str, links: DataFrame, *,
             # join and the write, so (stream, revision) stays unique.
             base_pos = log.tail_position()
             token = _uuid.uuid4().hex
-            marker = log._reserve(base_pos + 1, name, -1, token)
-            if marker is None and log._commit_protocol == "marker":
-                attempts += 1
-                if attempts > 200:
-                    raise RuntimeError(
-                        f"commit contention materializing {name} at position "
-                        f"{base_pos + 1}")
-                import time as _time
-                _time.sleep(0.05)
-                log._tail_position = None
-                continue
+            marker = None
+            if log.format != "delta":
+                marker = log._reserve(base_pos + 1, name, -1, token)
+                if marker is None:
+                    attempts += 1
+                    if attempts > 200:
+                        raise RuntimeError(
+                            f"commit contention materializing {name} at "
+                            f"position {base_pos + 1}")
+                    import time as _time
+                    _time.sleep(0.05)
+                    log._tail_position = None
+                    continue
 
             # (1) continue revision numbering from existing link-stream
             # heads. Link streams all live under the '$' prefix, so the
@@ -240,7 +242,7 @@ def _append_links(log, name: str, links: DataFrame, *,
                 F.lit("application/octet-stream").alias("content_type"),
                 F.lit(ticks).alias("created"),
             )
-            if marker is None and log.format == "delta":
+            if log.format == "delta":
                 # Delta-backed log: the bulk append MUST go through the
                 # transaction log (a direct parquet write into the table
                 # path bypasses the commit protocol — invisible to the
@@ -257,9 +259,6 @@ def _append_links(log, name: str, links: DataFrame, *,
                         f"Delta log (position {base_pos + 1})")
                 log._tail_position = None
                 continue
-            if marker is None:  # protocol "none": direct append
-                env.write.mode("append").parquet(log.path)
-                break
             if log._fenced_write(env, marker, token, single_file=False):
                 wm = log._advance_watermark(base_pos + n)
                 log._gc_markers(wm)

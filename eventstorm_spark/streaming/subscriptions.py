@@ -91,11 +91,12 @@ def _batch_resolver(spark: SparkSession, path: str):
     shape; the in-plan stream-static join can't prune (the probe isn't
     collectable at plan time) and would shuffle the corpus once the
     envelope outgrows the broadcast threshold. Visibility is re-read
-    per batch through the log's watermark fences (one cached
-    ``EventLog``; ``_load_deletions``/``_retention_frame`` re-check the
-    shared watermark on every call), so post-subscribe deletes,
-    tombstones and retention changes are observed exactly as the read
-    path would — unlike the subscribe-time-frozen in-plan form."""
+    per batch through the log's cache epoch (one cached ``EventLog``;
+    ``_load_deletions``/``_retention_frame`` run ``_sync_caches``, which
+    drops every cache once the commit clock moved), so post-subscribe
+    deletes, tombstones and retention changes are observed exactly as
+    the read path would — unlike the subscribe-time-frozen in-plan
+    form."""
     from eventstorm_spark.log.store import EventLog
 
     log = EventLog(spark, path)

@@ -242,9 +242,10 @@ def test_stolen_claim_fence_aborts_commit(spark, tmp_path):
     res_b = b.append("s", new_events(1, prefix="b"))  # steals + commits
     assert res_b.first_position == 1
     # a wakes up and tries to publish under its stolen claim
-    out = a._commit_batch("s", list(new_events(1, prefix="a")), 0, -1,
-                          marker, token_a)
-    assert out is None  # fence tripped, nothing published
+    ev = new_events(1, prefix="a")[0]
+    row = ("s", ev.uuid, ev.data, {}, None, 0, 1, ev.event_type,
+           ev.content_type, 0)
+    assert a._publish_rows([row], 0, marker, token_a) is False  # fence tripped
     rows = a.df().select("position").collect()
     assert sorted(r.position for r in rows) == [1]  # only b's event
     # the public retry path lands after the thief
@@ -441,18 +442,20 @@ def test_compaction_files_position_disjoint_and_watermark_survives(spark, tmp_pa
 
 
 def test_markerless_preexisting_log_backfills_watermark(spark, tmp_path):
-    """A log created before marker mode (no _commits/ evidence at all)
-    gets its watermark backfilled from the table on the first
-    marker-mode append, so stale-cache fast paths stay fenced."""
+    """A log written without markers (no _commits/ evidence at all —
+    bootstrapped by from_dataframe, or created before marker mode) gets
+    its watermark backfilled from the table on the first append, so
+    stale-cache fast paths stay fenced."""
     import os
 
-    from tests.fixtures import new_events
+    from eventstorm_spark.model import EVENT_SCHEMA
+    from tests.fixtures import envelope_rows, new_events
 
     path = str(tmp_path / "log")
-    legacy = EventLog(spark, path, commit_protocol="none")
-    legacy.append("s", new_events(3, prefix="old"))
+    EventLog.from_dataframe(
+        spark, path, spark.createDataFrame(envelope_rows("s", 3), EVENT_SCHEMA))
     assert not os.path.exists(os.path.join(path, "_commits"))
-    modern = EventLog(spark, path)  # marker mode
+    modern = EventLog(spark, path)
     res = modern.append("s", new_events(1, prefix="new"),
                         ExpectedRevision.at(2))
     assert res.first_position == 4
@@ -546,3 +549,110 @@ def test_append_multi_two_writer_cas_race(spark, tmp_path):
     # the surviving log is gapless: seed + the winner's 3 rows
     positions = sorted(r.position for r in df.collect())
     assert positions == list(range(1, 5))
+
+
+def _count_jobs(spark, fn) -> int:
+    """Run ``fn`` under a fresh Spark job group and return how many
+    jobs it launched (``statusTracker().getJobIdsForGroup``)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count pin")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_append_job_counts(spark, tmp_path):
+    """Spark jobs per append on a warm single-writer log. Own commits
+    advance the cache epoch, so a warm single-event append pays only
+    the duplicate-uuid check and the fenced write (no tail, head or
+    $deleted-streams rescan); a stale CAS is decided on cached state
+    and runs nothing. A foreign commit must still drop the caches, so
+    the next append pays more than a warm one."""
+    path = str(tmp_path / "log")
+    log = EventLog(spark, path)
+    log.append("s", new_events(2, prefix="w0"))
+    log.append("s", new_events(1, prefix="w1"))  # warm single-writer log
+
+    def stale():
+        with pytest.raises(WrongExpectedRevisionError):
+            log.append("s", new_events(1, prefix="x"), ExpectedRevision.at(0))
+
+    warm = _count_jobs(spark, lambda: log.append("s", new_events(1, prefix="a")))
+    assert warm == 3
+    assert _count_jobs(spark, lambda: log.append(
+        "s", new_events(1, prefix="b"), check_duplicates=False)) == 1
+    assert _count_jobs(spark, stale) == 0
+
+    EventLog(spark, path).append("t", new_events(1, prefix="o"))  # foreign
+    foreign = _count_jobs(
+        spark, lambda: log.append("s", new_events(1, prefix="c")))
+    assert foreign > warm
+    assert log.head_revision("s") == 5 and log.tail_position() == 7
+
+
+def test_appends_stay_dense_beside_readers_and_a_foreign_writer(spark, tmp_path):
+    """Stress for the lock the cache sync shares with appends: more
+    threads than cores, a short switch interval, own appenders, a
+    reader thread whose lookups run _sync_caches (and drop caches
+    whenever the foreign writer moved the watermark), and a second
+    instance committing to the same path. Positions must stay gapless
+    and every stream's revisions dense."""
+    import sys
+    import threading
+
+    path = str(tmp_path / "log")
+    log, other = EventLog(spark, path), EventLog(spark, path)
+    log.append("seed", new_events(1, prefix="seed"))
+    n_appenders = max(2, (os.cpu_count() or 4) - 1)
+    errors: list = []
+
+    def guarded(fn):
+        def run():
+            try:
+                fn()
+            except Exception as exc:  # surfaced by the assert below
+                errors.append(exc)
+        return run
+
+    def appender(i):
+        for j in range(2):
+            log.append(f"w-{i}", new_events(2, prefix=f"w{i}-{j}"))
+
+    def foreign():
+        for j in range(3):
+            other.append("f", new_events(1, prefix=f"f{j}"))
+
+    def reader():
+        for _ in range(4):
+            assert log.read_stream("seed").count() == 1
+            log.get_stream_metadata("seed")
+
+    threads = [threading.Thread(target=guarded(lambda i=i: appender(i)))
+               for i in range(n_appenders)]
+    threads += [threading.Thread(target=guarded(foreign)),
+                threading.Thread(target=guarded(reader))]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+
+    rows = log.df().select("stream", "position", "revision").collect()
+    total = 1 + 4 * n_appenders + 3
+    assert sorted(r.position for r in rows) == list(range(1, total + 1))
+    for stream in {r.stream for r in rows}:
+        revs = sorted(r.revision for r in rows if r.stream == stream)
+        assert revs == list(range(len(revs))), stream
+    assert log.head_revision("f") == 2

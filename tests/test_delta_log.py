@@ -16,7 +16,7 @@ import pytest
 from eventstorm_spark.errors import WrongExpectedRevisionError
 from eventstorm_spark.log.delta import DELTA_AVAILABLE, backend, is_conflict
 from eventstorm_spark.log.store import EventLog
-from eventstorm_spark.model import ExpectedRevision
+from eventstorm_spark.model import ExpectedRevision, NewEvent
 
 def needs_delta(fn):  # suite runs on either backend (delta or shim)
     return fn
@@ -128,42 +128,60 @@ def test_delta_concurrent_appends_keep_positions_gapless(spark, tmp_path):
 
 def test_own_commits_do_not_evict_warm_caches(spark, tmp_path):
     """Single-writer fast path: this instance's own commit advances the
-    shared watermark, and the staleness fences must advance with it —
-    otherwise every append invalidates the head/tail caches it just
-    wrote and pays a full-log rescan. A raw append to a $$-metadata
-    stream is the exception: the retention caches must stay
-    invalidatable there (only set_stream_metadata writes through)."""
+    shared watermark, and the cache epoch must advance with it —
+    otherwise every append drops the head/tail/deletions caches and
+    pays full-log rescans. A batch drops only the caches it stales
+    itself: a raw $$-append drops the retention caches, a delete marker
+    drops the deletions cache. A foreign commit drops every cache."""
     from eventstorm_spark.log.store import EventLog
     from tests.fixtures import new_events
 
     log = EventLog(spark, str(tmp_path / "log"))
     log.append("s-1", new_events(2, prefix="a"))
-    assert log._revisions.get("s-1") == 1 and log._tail_position == 2
-    # the fence must consider its own commit fresh
-    log._refresh_log_caches()
-    assert log._revisions.get("s-1") == 1, "own commit evicted the cache"
-    assert log._tail_position == 2
-    log._refresh_meta_caches()
-    meta_fence = log._meta_cache_watermark
-    assert meta_fence == log._read_watermark()
+    log.append("s-x", new_events(1, prefix="x"))
+    log.delete_stream("s-x")
+    log.append("s-1", new_events(1, prefix="b"))
+    assert log._revisions.get("s-1") == 2 and log._tail_position == 5
+    dels = log._load_deletions()
+    assert dels["s-x"][0] == "deleted"
+    # the epoch must consider its own commits fresh
+    log._sync_caches()
+    assert log._cache_epoch == log._read_watermark()
+    assert log._revisions.get("s-1") == 2, "own commit evicted the cache"
+    assert log._tail_position == 5
+    log.append("s-1", new_events(1, prefix="c"))
+    assert log._deletions is dels, "own commit evicted the deletions cache"
 
-    # a second instance's commit DOES evict (cross-process staleness)
+    # an own delete_stream stales (and drops) the deletions cache
+    log.delete_stream("s-1")
+    assert log._deletions is None
+    assert log._deletion_state("s-1")[0] == "deleted"
+    assert log._cache_epoch == log._read_watermark()
+
+    # raw $$-append drops the retention caches
+    assert log._any_meta_streams() is False
+    assert log.get_stream_metadata("s-2") == {}
+    log.append("$$s-2", [NewEvent(uuid="m", event_type="$metadata",
+                                  data='{"$maxCount": 1}')])
+    assert log._has_meta_streams is None and not log._stream_meta
+    assert log.get_stream_metadata("s-2") == {"$maxCount": 1}
+
+    # a second instance's commit drops every cache (cross-process)
+    assert log._deletions_frame() is not None  # warms both deletion caches
     other = EventLog(spark, str(tmp_path / "log"))
-    other.append("s-2", new_events(1, prefix="b"))
-    log._refresh_log_caches()
+    other.append("s-2", new_events(1, prefix="o"))
+    log._sync_caches()
     assert log._tail_position is None and not log._revisions
-
-    # raw $$-append keeps the meta fence behind so retention re-reads
-    log.append("$$s-1", new_events(1, prefix="m"))
-    assert log._meta_cache_watermark != log._read_watermark()
+    assert log._deletions is None and log._deletions_df is None
+    assert not log._stream_meta and log._has_meta_streams is None
 
 
 def test_stalled_foreign_commit_keeps_fences_conservative(spark, tmp_path):
     """A foreign writer can be published-but-unadvertised (fenced data
     write done, crash/stall before the watermark advance). An own
-    commit built on top of such rows must NOT advance the staleness
-    fences — the foreign writer's advance is then a no-op, so a fence
-    frozen past its rows would keep a stale head cache alive forever
+    commit built on top of such rows must NOT advance the cache epoch
+    — the foreign writer's advance is then a no-op, so an epoch frozen
+    past its rows would keep a stale head cache alive forever
     (duplicate revisions / wrongly-passing CAS)."""
     from eventstorm_spark.log.store import EventLog
     from tests.fixtures import new_events
@@ -172,7 +190,7 @@ def test_stalled_foreign_commit_keeps_fences_conservative(spark, tmp_path):
     a = EventLog(spark, p)
     a.append("s", new_events(3, prefix="a"))   # revs 0..2
     a.append("t", new_events(1, prefix="t"))
-    assert a._log_cache_watermark == a._read_watermark()
+    assert a._cache_epoch == a._read_watermark()
 
     b = EventLog(spark, p)
     b._advance_watermark = lambda pos: b._read_watermark()  # stall model
@@ -182,20 +200,20 @@ def test_stalled_foreign_commit_keeps_fences_conservative(spark, tmp_path):
     a._tail_position = None
     assert a._revisions.get("s") == 2
     a.append("t", new_events(1, prefix="t2"))
-    # base position sat above the pre-advance watermark, so the fence
-    # must have stayed behind (next refresh will invalidate)
-    assert a._log_cache_watermark != a._read_watermark()
+    # base position sat above the pre-advance watermark, so the epoch
+    # must have stayed behind (next sync drops every cache)
+    assert a._cache_epoch != a._read_watermark()
     res = a.append("s", new_events(1, prefix="a2"))
     assert res.last_revision == 4  # continues after b's rev 3
 
 
 def test_materialize_on_delta_log_goes_through_transaction_log(spark, tmp_path):
     """Bulk link materialization on a format='delta' log must commit
-    through the transaction log. Regression: _reserve returns None for
-    non-marker protocols, and the bulk writer treated None as the
-    'none'-protocol DIRECT parquet append — rows written into the table
-    path outside the commit protocol, invisible to the shim's snapshot
-    (and corrupting under real Delta)."""
+    through the transaction log. Regression: a delta log has no commit
+    marker, and the bulk writer treated a missing marker as a DIRECT
+    parquet append — rows written into the table path outside the
+    commit protocol, invisible to the shim's snapshot (and corrupting
+    under real Delta)."""
     from pyspark.sql import functions as F
 
     from eventstorm_spark.projections.system import materialize
@@ -267,3 +285,22 @@ def test_delta_head_cache_fence_blocks_duplicate_revisions(spark, tmp_path):
     revs = [r["revision"] for r in
             b.read_stream("s").orderBy("revision").collect()]
     assert revs == [0, 1, 2, 3, 4, 5]          # dense, no duplicates
+
+
+def test_delta_metadata_visible_across_instances(spark, tmp_path):
+    """The retention caches follow the delta clock too: B sets
+    ``$maxCount`` through the transaction log and A's next read, with
+    its metadata caches already warm ("no metadata streams"), must
+    apply it. Before one cache epoch covered every cache, the metadata
+    caches never revalidated under format='delta' and A kept reading
+    all 5 events."""
+    from tests.fixtures import new_events
+
+    path = str(tmp_path / "dlog4")
+    a = EventLog(spark, path, format="delta")
+    b = EventLog(spark, path, format="delta")
+    a.append("s", new_events(5))
+    assert a.read_stream("s").count() == 5   # warms A's metadata caches
+    b.set_stream_metadata("s", max_count=2)
+    assert a.read_stream("s").count() == 2
+    assert a.get_stream_metadata("s") == {"$maxCount": 2}
