@@ -270,6 +270,6 @@ def _append_links(log, name: str, links: DataFrame, *,
                     f"commit contention materializing {name} (claim at "
                     f"position {base_pos + 1} repeatedly stolen)")
             log._tail_position = None
-        log._tail_position = base_pos + n
-        log._revisions.clear()  # read-through cache; heads changed for link streams
+        # the link streams' heads and uuid sets changed
+        log._drop_caches()
         return n

@@ -569,12 +569,17 @@ def _count_jobs(spark, fn) -> int:
 
 def test_warm_append_job_counts(spark, tmp_path):
     """Spark jobs per append on a warm single-writer log. Own commits
-    advance the cache epoch, so a warm single-event append pays only
-    the duplicate-uuid check and the fenced write (no tail, head or
-    $deleted-streams rescan); a stale CAS is decided on cached state
-    and runs nothing. A foreign commit must still drop the caches, so
-    the next append pays more than a warm one."""
+    advance the cache epoch and write their heads and uuids through, so
+    a warm single-event append pays only the fenced write: the
+    duplicate check is a lookup in the per-stream uuid index (no tail,
+    head, duplicate or $deleted-streams job). The first duplicate-checked
+    append to a stream whose index is not loaded pays one pruned scan
+    that fills both the uuid set and the head, plus the write. A stale
+    CAS is decided on cached state and runs nothing. A foreign commit
+    must still drop the caches, so the next append pays more than a
+    warm one."""
     path = str(tmp_path / "log")
+    EventLog(spark, path).append("t", new_events(2, prefix="t0"))  # earlier writer
     log = EventLog(spark, path)
     log.append("s", new_events(2, prefix="w0"))
     log.append("s", new_events(1, prefix="w1"))  # warm single-writer log
@@ -584,16 +589,135 @@ def test_warm_append_job_counts(spark, tmp_path):
             log.append("s", new_events(1, prefix="x"), ExpectedRevision.at(0))
 
     warm = _count_jobs(spark, lambda: log.append("s", new_events(1, prefix="a")))
-    assert warm == 3
+    assert warm == 1
     assert _count_jobs(spark, lambda: log.append(
         "s", new_events(1, prefix="b"), check_duplicates=False)) == 1
     assert _count_jobs(spark, stale) == 0
+    # "t" is on disk, but neither its head nor its uuids are cached here
+    assert "t" not in log._uuids and "t" not in log._revisions
+    assert _count_jobs(spark, lambda: log.append("t", new_events(1, prefix="c"))) == 2
+    assert log.head_revision("t") == 2
 
     EventLog(spark, path).append("t", new_events(1, prefix="o"))  # foreign
     foreign = _count_jobs(
-        spark, lambda: log.append("s", new_events(1, prefix="c")))
+        spark, lambda: log.append("s", new_events(1, prefix="d")))
     assert foreign > warm
-    assert log.head_revision("s") == 5 and log.tail_position() == 7
+    assert log.head_revision("s") == 5 and log.tail_position() == 10
+
+
+@pytest.mark.parametrize("warm", [True, False], ids=["warm_index", "cold_index"])
+def test_foreign_duplicate_uuid_is_caught(spark, tmp_path, warm):
+    """Another instance commits uuid u to s; this instance's append of
+    u must raise and write nothing, whether its uuid index for s was
+    loaded before the foreign commit (the moved clock drops it) or was
+    never loaded."""
+    path = str(tmp_path / "log")
+    a, b = EventLog(spark, path), EventLog(spark, path)
+    a.append("s", new_events(1, prefix="a"), check_duplicates=warm)
+    assert ("s" in a._uuids) is warm
+    dup = new_events(1, prefix="dup")
+    b.append("s", dup)
+    with pytest.raises(ConflictError):
+        a.append("s", dup)
+    assert a.df().count() == 2
+    assert a.head_revision("s") == 1
+
+
+@pytest.mark.parametrize("warm", [True, False], ids=["warm_index", "cold_index"])
+def test_soft_deleted_uuid_is_reclaimed_by_scavenge(spark, tmp_path, warm):
+    """A soft-deleted event's row stays in the log until scavenge(), so
+    its uuid is still taken; scavenge reclaims the row and drops the
+    index, and the uuid appends again. The cold variant checks from a
+    fresh instance that never loaded the stream's uuids."""
+    path = str(tmp_path / "log")
+    log = EventLog(spark, path)
+    old = new_events(2, prefix="old")
+    log.append("s", old)
+    log.delete_stream("s")
+    checker = log if warm else EventLog(spark, path)
+    with pytest.raises(ConflictError):
+        checker.append("s", old[:1])
+    assert checker.df().where("stream = 's'").count() == 2
+
+    assert log.scavenge() == 2
+    assert not log._uuids
+    if warm:  # reload the index after the rewrite, then check from it
+        log.append("s", new_events(1, prefix="new"))
+        assert "s" in log._uuids
+    appender = log if warm else EventLog(spark, path)
+    res = appender.append("s", old[:1])
+    assert res.last_revision == (3 if warm else 2)  # numbering continues
+    uuids = [r.uuid for r in appender.read_stream("s").collect()]
+    assert uuids.count(old[0].uuid) == 1
+
+
+@pytest.mark.parametrize("warm", [True, False], ids=["warm_index", "cold_index"])
+def test_events_append_after_a_failed_publish(spark, tmp_path, warm):
+    """A tripped fence (_publish_rows returns False) adds nothing to the
+    uuid index: the retry inside the same append lands the very same
+    events, once, and only then are their uuids taken."""
+    path = str(tmp_path / "log")
+    EventLog(spark, path).append("s", new_events(1, prefix="pre"))
+    log = EventLog(spark, path)
+    if warm:
+        log.append("s", new_events(1, prefix="w"))
+        assert "s" in log._uuids
+    real = log._fenced_write
+    tripped = []
+
+    def trip_once(batch, marker, token, **kw):
+        # the thief's view: our claim is gone and nothing is published
+        log._fenced_write = real
+        log._release(marker, token)
+        tripped.append(token)
+        return False
+
+    log._fenced_write = trip_once
+    evs = new_events(2, prefix="x")
+    res = log.append("s", evs)
+    assert len(tripped) == 1
+    assert res.count == 2 and res.last_revision == (3 if warm else 2)
+    rows = log.df().where("stream = 's'").collect()
+    assert sorted(r.uuid for r in rows if r.uuid.startswith("x")) == sorted(
+        e.uuid for e in evs)
+    with pytest.raises(ConflictError):
+        log.append("s", evs[1:])
+
+
+@pytest.mark.parametrize("warm", [True, False], ids=["warm_index", "cold_index"])
+def test_duplicate_caught_after_uuid_index_eviction(spark, tmp_path,
+                                                    monkeypatch, warm):
+    """With the index budget at a few uuids, loading more streams evicts
+    the least recently used ones whole; a duplicate is caught both in a
+    stream still indexed and in an evicted one (which is reloaded)."""
+    from eventstorm_spark.log import store
+
+    monkeypatch.setattr(store, "_UUID_INDEX_BUDGET", 3)
+    log = EventLog(spark, str(tmp_path / "log"))
+    firsts = {}
+    for s in ("s1", "s2", "s3"):
+        firsts[s] = new_events(2, prefix=s)
+        log.append(s, firsts[s])
+    assert list(log._uuids) == ["s3"]
+    assert log._uuid_count == 2
+    target = "s3" if warm else "s1"
+    assert (target in log._uuids) is warm
+    with pytest.raises(ConflictError):
+        log.append(target, firsts[target][1:])
+    assert log.df().count() == 6
+    assert log._uuid_count <= 3 or len(log._uuids) == 1
+
+
+def test_public_lookups_see_another_instances_commit(spark, tmp_path):
+    """head_revision() and tail_position() sync the cache epoch, so a
+    second instance's commit is visible through them."""
+    path = str(tmp_path / "log")
+    a, b = EventLog(spark, path), EventLog(spark, path)
+    a.append("s", new_events(1, prefix="a"))
+    assert a.head_revision("s") == 0 and a.tail_position() == 1
+    b.append("s", new_events(1, prefix="b"))
+    assert a.head_revision("s") == 1
+    assert a.tail_position() == 2
 
 
 def test_appends_stay_dense_beside_readers_and_a_foreign_writer(spark, tmp_path):

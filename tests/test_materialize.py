@@ -46,6 +46,20 @@ def test_refresh_full_then_incremental(log, tmp_path):
     assert s2["user-2"] == {"n": 7} and s2["user-3"] == {"n": 1}
 
 
+def test_refresh_folds_another_instances_commit(log, tmp_path):
+    """A Materializer over one EventLog folds events another instance
+    appended to the same path: refresh() bounds its fold by
+    tail_position(), which must not serve a tail cached before the
+    foreign commit."""
+    m = Materializer(log, _spec(), str(tmp_path / "state"))
+    m.refresh()
+    assert m.state_of("user-3") is None
+    EventLog(log.spark, log.path).append("user-3", new_events(2, prefix="f"))
+    m.refresh()
+    assert json.loads(m.state_of("user-3")) == {"n": 2}
+    assert _states(m.state()) == _states(run_batch(_spec(), log.df()))
+
+
 def test_noop_refresh_keeps_checkpoint(log, tmp_path):
     m = Materializer(log, _spec(), str(tmp_path / "state"))
     m.refresh()
