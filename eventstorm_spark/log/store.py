@@ -16,9 +16,12 @@ re-established here as a *single-writer commit discipline*:
 - PRIMARY KEY(stream, uuid) (backend.go:311-329) is a per-stream uuid
   index: the first duplicate-checked append to a stream in a cache
   epoch loads the stream's uuids (and its head) in one pruned scan, own
-  commits write through, and the index is dropped with every other
-  cache when a foreign commit moves the commit clock, and by
-  ``scavenge()``; the duplicate check itself runs no Spark job;
+  commits write through, a foreign commit's rows are folded in by one
+  scan of the positions it advertised, and ``scavenge()`` drops it;
+  the duplicate check itself runs no Spark job;
+- every remaining lookup (a head, the tail, a stream read) is one Spark
+  job: point lookups are top-1 sorts, and an unbounded stream read is a
+  top-k bounded by the head this instance synced;
 - the expected-revision CAS (streams.go:93-115) and event validation
   (streams.go:191-203) run before anything is written, so a failed append
   writes nothing (the reference's tx-rollback equivalent).
@@ -33,6 +36,7 @@ the log to the driver.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import threading
 import time
@@ -48,7 +52,7 @@ from eventstorm_spark.errors import (
     StreamNotFoundError,
     WrongExpectedRevisionError,
 )
-from eventstorm_spark.log.plan import compile_read
+from eventstorm_spark.log.plan import _bounds, compile_read
 from eventstorm_spark.localframe import local_frame
 from eventstorm_spark.model import (
     ALL_STREAM,
@@ -110,6 +114,24 @@ _UNSET = object()
 # stays near 64 MB.
 _UUID_INDEX_BUDGET = 500_000
 
+# Widest commit-clock advance _sync_caches folds into the caches; a
+# wider one drops them. Measured (local[4], 400k-row log in 4
+# position-sorted files): the fold's collect holds ~456 B per row on the
+# driver (tracemalloc), and at 10k rows it takes ~0.34 s (4.6 MB), below
+# the ~0.46 s that a drop costs to reload just the tail and one stream's
+# uuid set; at 50k rows it holds 23 MB.
+_FOLD_ROW_CAP = 10_000
+
+# Most rows an unbounded stream read runs as a top-k (EventLog.read).
+# TakeOrderedAndProject keeps its top-k rows in memory and merges them in
+# one place without spilling, where the range-partitioned sort stays
+# distributed and spills. Measured (local[4], 476k-row log in 8 files,
+# fresh plan per read): the top-k read was faster at every size tried,
+# 0.29 vs 0.47 s at 500 rows and 1.06 vs 1.32 s at 100k, and 100k
+# envelope rows with small payloads hold ~38 MB (SizeEstimator, ~380 B
+# per row).
+_TOPK_STREAM_ROWS = 100_000
+
 
 class EventLog:
     """A named event log over a Parquet directory.
@@ -152,12 +174,16 @@ class EventLog:
 
     Head revisions, the tail, deletion markers, stream metadata and the
     per-stream uuid index are read-through caches that hold for one
-    reading of the commit clock (the watermark, or the Delta version):
-    ``_sync_caches`` drops them all when the clock moves, and
-    ``scavenge()`` drops them after its rewrite. A stream's uuid set is
-    loaded by its first duplicate-checked append in an epoch (one scan
-    that also yields its head), own commits add their uuids to it, and
-    at most ``_UUID_INDEX_BUDGET`` uuids stay cached.
+    reading of the commit clock (the watermark, or the Delta version).
+    Own commits write through and move the epoch with them. When
+    another writer moves the watermark, ``_sync_caches`` folds the rows
+    it advertised into the caches with one pruned scan; it drops them
+    all only when the gap cannot be folded (no epoch yet, a rewrite, a
+    gap wider than ``_FOLD_ROW_CAP`` or with a missing position, or
+    ``format="delta"``), and ``scavenge()`` drops them after its
+    rewrite. A stream's uuid set is loaded by its first
+    duplicate-checked append in an epoch (one scan that also yields its
+    head), and at most ``_UUID_INDEX_BUDGET`` uuids stay cached.
     """
 
     def __init__(self, spark: SparkSession, path: str, *,
@@ -440,21 +466,26 @@ class EventLog:
 
     # -- revision / position bookkeeping ----------------------------------
 
+    @staticmethod
+    def _newest(df: DataFrame, column: str) -> Optional[int]:
+        """Largest ``column`` value in ``df`` (None = no rows) as a top-1
+        sort: TakeOrderedAndProject is one Spark job, where a global
+        ``max`` aggregate runs two under AQE (shuffle stage + result)."""
+        rows = df.select(column).orderBy(F.col(column).desc()).limit(1).collect()
+        return int(rows[0][0]) if rows else None
+
     def head_revision(self, stream: str) -> Optional[int]:
         """Read-through head-revision lookup — streams.go:61-91 +
         backend.go:82-95 (max revision query). None = stream absent.
         Syncs the cache epoch first, so another writer's commit is
         seen."""
         self._sync_caches()
-        if stream in self._revisions:
-            return self._revisions[stream]
-        row = (
-            self.df().where(F.col("stream") == stream)
-            .agg(F.max("revision").alias("r")).collect()[0]
-        )
-        if row["r"] is None:
-            return None
-        self._revisions[stream] = int(row["r"])
+        if stream not in self._revisions:
+            head = self._newest(self.df().where(F.col("stream") == stream),
+                                "revision")
+            if head is None:
+                return None
+            self._revisions[stream] = head
         return self._revisions[stream]
 
     def tail_position(self) -> int:
@@ -462,8 +493,7 @@ class EventLog:
         cache epoch first, so another writer's commit is seen."""
         self._sync_caches()
         if self._tail_position is None:
-            row = self.df().agg(F.max("position").alias("p")).collect()[0]
-            self._tail_position = int(row["p"]) if row["p"] is not None else 0
+            self._tail_position = self._newest(self.df(), "position") or 0
         return self._tail_position
 
     # -- append path ------------------------------------------------------
@@ -494,16 +524,22 @@ class EventLog:
         """The one cross-process staleness rule. Every cache on this
         instance (head revisions, tail, deletion markers, stream
         metadata, the per-stream uuid index) holds for
-        ``_cache_epoch``, one reading of the log's
-        commit clock: the shared watermark file for parquet logs, the
-        transaction-log version (``delta.current_version``, one
-        directory listing) under ``format="delta"``. A moved clock means
-        another writer committed — a new head, a uuid, a delete/tombstone
-        marker or a metadata event these caches predate — so all of
-        them are dropped. Own commits move the epoch along in
-        ``_publish_rows`` when that is provably safe. The uuid index
-        is loaded per stream by ``_stream_uuids``, after the append's
-        tail read, so it obeys the same tail-before-heads order below.
+        ``_cache_epoch``, one reading of the log's commit clock: the
+        shared watermark file for parquet logs, the transaction-log
+        version (``delta.current_version``, one directory listing)
+        under ``format="delta"``. Own commits move the epoch along in
+        ``_publish_rows`` when that is provably safe.
+
+        A clock that moved forward from epoch ``e`` to ``c`` on a
+        parquet log means other writers committed positions ``(e, c]``.
+        Every row at or below the watermark was published before the
+        watermark was advertised, so ``_fold`` reads exactly those rows
+        with one pruned scan and brings the caches forward: one job
+        instead of a rescan per cache. The caches are dropped instead
+        (the next lookups re-read the table) when there is no epoch yet,
+        the clock went backwards (a rewrite), the gap is wider than
+        ``_FOLD_ROW_CAP`` or misses a position, or the log is Delta,
+        whose clock is a version, not a position.
 
         On the append path the CAS head read and the position-reserve
         tail read are separate jobs; if another process's commit
@@ -515,12 +551,13 @@ class EventLog:
         tail-before-head read order in ``append_multi`` this closes
         every interleaving: a commit invisible to the tail read blocks
         the reserve; one visible to it is visible to the later head
-        reads too). Under delta the position-overlap validation only
-        rejects a stale tail, so the version clock is what keeps a stale
-        per-stream head from committing duplicate (stream, revision)
-        pairs.
+        reads too). A fold keeps that order: it never raises the tail
+        past the heads it brings forward. Under delta the
+        position-overlap validation only rejects a stale tail, so the
+        version clock is what keeps a stale per-stream head from
+        committing duplicate (stream, revision) pairs.
 
-        Taken under ``_lock`` so a read-path drop never lands inside an
+        Taken under ``_lock`` so a read-path sync never lands inside an
         append: between its tail, head and CAS reads, or between its
         publish and the write-through of the heads and tail it set."""
         with self._lock:
@@ -529,10 +566,60 @@ class EventLog:
                 clock = current_version(self.path)
             else:
                 clock = self._read_watermark()
-            if clock == self._cache_epoch:
+            epoch = self._cache_epoch
+            if clock == epoch:
                 return
+            if not (self.format != "delta" and epoch is not None
+                    and 0 < clock - epoch <= _FOLD_ROW_CAP
+                    and self._fold(epoch, clock)):
+                self._drop_caches()
             self._cache_epoch = clock
-            self._drop_caches()
+
+    def _fold(self, lo: int, hi: int) -> bool:
+        """Bring the caches from epoch ``lo`` to watermark ``hi`` with the
+        rows at positions ``(lo, hi]``, read in one pruned scan. False
+        (caches untouched) when the rows are not exactly those
+        positions, e.g. after a rewrite. A cached head moves to the
+        gap's newest revision of its stream (max: a head loaded past
+        the old epoch may already be newer); uncached heads stay
+        uncached, since a head set from the gap alone could miss rows a
+        later, higher tail read sees. The tail only moves up, and only
+        when cached, so a forced fresh tail read stays fresh. Loaded
+        uuid sets gain their streams' uuids, and the deletions and
+        metadata caches go only if the gap touches their streams."""
+        rows = (self.df()
+                .where((F.col("position") > lo) & (F.col("position") <= hi))
+                .select("stream", "uuid", "revision", "position").collect())
+        if len(rows) != hi - lo or len({r["position"] for r in rows}) != hi - lo:
+            return False
+        newest: dict[str, int] = {}
+        for r in rows:
+            stream = r["stream"]
+            newest[stream] = max(newest.get(stream, -1), r["revision"])
+            loaded = self._uuids.get(stream)
+            if loaded is not None and r["uuid"] not in loaded:
+                loaded.add(r["uuid"])
+                self._uuid_count += 1
+        for stream, rev in newest.items():
+            if stream in self._revisions:
+                cur = self._revisions[stream]
+                self._revisions[stream] = rev if cur is None else max(cur, rev)
+        if self._tail_position is not None:
+            self._tail_position = max(self._tail_position, hi)
+        self._drop_stale(newest)
+        self._trim_uuid_index()
+        return True
+
+    def _drop_stale(self, streams) -> None:
+        """Drop the caches derived from system streams among ``streams``
+        (a committed batch's, or a folded gap's): deletion markers and
+        stream metadata."""
+        if DELETED_STREAMS in streams:
+            self._deletions = None
+            self._deletions_df = None
+        if any(s.startswith("$$") for s in streams):
+            self._stream_meta.clear()
+            self._has_meta_streams = None
 
     def _drop_caches(self) -> None:
         """Forget every read-through cache; the next lookups re-read
@@ -614,9 +701,12 @@ class EventLog:
         its head) with one pruned scan the first time the stream is
         appended to in a cache epoch, after the attempt's tail read; a
         published batch adds its uuids to every loaded set. A lost
-        reserve, a tripped fence or an error adds nothing, and the
-        index is dropped with the other caches when a foreign commit
-        moves the clock or ``scavenge()`` rewrites the log.
+        reserve, a tripped fence or an error adds nothing. Another
+        writer's uuids join the loaded sets when the next sync folds its
+        commit; the index is dropped with the other caches only when
+        that sync cannot fold (see ``_sync_caches``) or ``scavenge()``
+        rewrites the log. After a foreign commit the next append pays
+        one fold scan plus its write.
         """
         if not requests:
             raise ValueError("append_multi requires at least one request")
@@ -760,18 +850,12 @@ class EventLog:
                 # watermark moves, and an epoch past such rows would
                 # freeze a stale head cache forever: duplicate
                 # revisions / wrongly-passing CAS). Otherwise the epoch
-                # stays behind and the next sync drops every cache,
-                # which is always safe. Delta commits never move it:
-                # the next sync re-reads after every one.
+                # stays behind and the next sync folds every row above
+                # it, ours included, or drops every cache. Delta commits
+                # never move it: the next sync drops after every one.
                 self._cache_epoch = wm
             self._gc_markers(wm)
-        streams = {r[0] for r in rows}
-        if DELETED_STREAMS in streams:
-            self._deletions = None
-            self._deletions_df = None
-        if any(s.startswith("$$") for s in streams):
-            self._stream_meta.clear()
-            self._has_meta_streams = None
+        self._drop_stale({r[0] for r in rows})
         return True
 
     # -- deletion (S9 — stubs in the reference, grpc_server.go:271-281) ---
@@ -1245,7 +1329,15 @@ class EventLog:
         """Execute a read plan. Missing stream -> StreamNotFoundError
         (streams.go:211-222); tombstoned -> StreamDeletedError; a
         soft-deleted stream reads as recreated-or-missing (only events
-        appended after the delete are visible)."""
+        appended after the delete are visible).
+
+        A stream read with no limit is the stream as of the head this
+        instance synced: it gains ``revision <= head``, and, up to
+        ``_TOPK_STREAM_ROWS``, the limit ``head + 1``, so it compiles to
+        one top-k job instead of a range-partitioned sort (three jobs
+        under AQE). The predicate is what makes the limit safe: a row a
+        concurrent writer adds past the head can never push a backwards
+        read's oldest event out of the window."""
         df = self.df()
         rt_for_resolution = _UNSET
         if opts.stream is not None:
@@ -1256,13 +1348,17 @@ class EventLog:
             if kind == "deleted":
                 df = df.where(~((F.col("stream") == sid)
                                 & (F.col("position") <= before)))
-                head = (df.where(F.col("stream") == sid)
-                        .agg(F.max("revision").alias("r")).collect()[0]["r"])
-                if head is None:
-                    raise StreamNotFoundError(sid)
-            elif self.head_revision(sid) is None:
+                head = self._newest(df.where(F.col("stream") == sid), "revision")
+            else:
+                head = self.head_revision(sid)
+            if head is None:
                 raise StreamNotFoundError(sid)
             df = self._apply_retention(df, sid)
+            so = opts.stream
+            if _bounds(so.kind, opts.direction, so.revision, opts.count)[2] is None:
+                df = df.where(F.col("revision") <= head)
+                if head < _TOPK_STREAM_ROWS:
+                    opts = dataclasses.replace(opts, count=head + 1)
         else:
             # $all reads honor retention too: one broadcast join against
             # the (metadata-stream-count)-sized retention table — the
@@ -1279,8 +1375,6 @@ class EventLog:
                       .drop("__floor", "__cutoff"))
         out = compile_read(df, opts)
         if opts.resolve_links:
-            from eventstorm_spark.log.plan import _bounds
-
             out = self.resolve_links(
                 out, self._resolution_envelope(rt_for_resolution))
             if opts.stream is not None:

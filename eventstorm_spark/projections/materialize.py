@@ -29,7 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from eventstorm_spark.log.store import EventLog
-from eventstorm_spark.projections.batch import run_batch, run_batch_incremental
+from eventstorm_spark.projections.batch import (
+    FINAL_SCHEMA,
+    run_batch,
+    run_batch_incremental,
+)
 from eventstorm_spark.projections.dsl import Projection
 
 
@@ -56,11 +60,14 @@ class Materializer:
             return None
 
     def state(self) -> Optional[DataFrame]:
-        """The latest materialized (partition, state) table, or None."""
+        """The latest materialized (partition, state) table, or None.
+        Read with the known ``FINAL_SCHEMA``: schema inference would
+        launch a Spark job on every call, and ``refresh()`` calls this
+        twice."""
         pos = self.checkpoint_position()
         if pos is None:
             return None
-        return self.log.spark.read.parquet(
+        return self.log.spark.read.schema(FINAL_SCHEMA).parquet(
             os.path.join(self.state_path, f"state-{pos}"))
 
     def state_of(self, partition: str):

@@ -575,9 +575,10 @@ def test_warm_append_job_counts(spark, tmp_path):
     head, duplicate or $deleted-streams job). The first duplicate-checked
     append to a stream whose index is not loaded pays one pruned scan
     that fills both the uuid set and the head, plus the write. A stale
-    CAS is decided on cached state and runs nothing. A foreign commit
-    must still drop the caches, so the next append pays more than a
-    warm one."""
+    CAS is decided on cached state and runs nothing. The next append
+    after a foreign commit folds the foreign rows into the caches with
+    one scan, so it pays that scan plus the write: more than a warm
+    one."""
     path = str(tmp_path / "log")
     EventLog(spark, path).append("t", new_events(2, prefix="t0"))  # earlier writer
     log = EventLog(spark, path)
@@ -602,7 +603,37 @@ def test_warm_append_job_counts(spark, tmp_path):
     foreign = _count_jobs(
         spark, lambda: log.append("s", new_events(1, prefix="d")))
     assert foreign > warm
+    assert foreign == 2  # fold + write
     assert log.head_revision("s") == 5 and log.tail_position() == 10
+    assert log.head_revision("t") == 3
+
+
+def test_lookup_job_counts(spark, tmp_path):
+    """Spark jobs per event-path lookup, once the deletions and
+    metadata probes are cached: each lookup is a single job. A head or
+    tail lookup is a top-1 sort (a global max aggregate runs two jobs
+    under AQE); an unbounded stream read is a top-k bounded by the head,
+    so it runs one job when the head is cached and two when it is not;
+    an $all page is one top-k."""
+    path = str(tmp_path / "log")
+    log = EventLog(spark, path)
+    log.append("s", new_events(3, prefix="s"))
+    EventLog(spark, path).append("t", new_events(2, prefix="t"))  # foreign
+    assert len(log.read_stream("s").collect()) == 3  # folds "t", warms probes
+    assert "t" not in log._revisions
+
+    def read(stream, want):
+        assert len(log.read_stream(stream).collect()) == want
+
+    assert _count_jobs(spark, lambda: read("s", 3)) == 1
+    assert _count_jobs(spark, lambda: read("t", 2)) == 2
+    page = lambda: log.read_all(from_position=2, count=2).collect()
+    assert _count_jobs(spark, page) == 1
+    log._revisions.clear()
+    assert _count_jobs(spark, lambda: log.head_revision("s")) == 1
+    log._tail_position = None
+    assert _count_jobs(spark, log.tail_position) == 1
+    assert log.head_revision("s") == 2 and log.tail_position() == 5
 
 
 @pytest.mark.parametrize("warm", [True, False], ids=["warm_index", "cold_index"])

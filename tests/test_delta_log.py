@@ -132,7 +132,9 @@ def test_own_commits_do_not_evict_warm_caches(spark, tmp_path):
     otherwise every append drops the head/tail/deletions caches and
     pays full-log rescans. A batch drops only the caches it stales
     itself: a raw $$-append drops the retention caches, a delete marker
-    drops the deletions cache. A foreign commit drops every cache."""
+    drops the deletions cache. A foreign commit is folded in: the tail
+    moves and the caches its rows do not touch survive (the fallback
+    drop is pinned by test_wide_foreign_gap_drops_every_cache)."""
     from eventstorm_spark.log.store import EventLog
     from tests.fixtures import new_events
 
@@ -166,14 +168,16 @@ def test_own_commits_do_not_evict_warm_caches(spark, tmp_path):
     assert log._has_meta_streams is None and not log._stream_meta
     assert log.get_stream_metadata("s-2") == {"$maxCount": 1}
 
-    # a second instance's commit drops every cache (cross-process)
+    # a second instance's commit is folded into the caches (cross-process)
     assert log._deletions_frame() is not None  # warms both deletion caches
+    dels, delf = log._deletions, log._deletions_df
     other = EventLog(spark, str(tmp_path / "log"))
     other.append("s-2", new_events(1, prefix="o"))
     log._sync_caches()
-    assert log._tail_position is None and not log._revisions
-    assert log._deletions is None and log._deletions_df is None
-    assert not log._stream_meta and log._has_meta_streams is None
+    assert log._cache_epoch == log._read_watermark() == 9
+    assert log._tail_position == 9 and log._revisions.get("s-1") == 3
+    assert log._deletions is dels and log._deletions_df is delf
+    assert log._stream_meta == {"s-2": {"$maxCount": 1}}
 
 
 def test_stalled_foreign_commit_keeps_fences_conservative(spark, tmp_path):
@@ -205,6 +209,148 @@ def test_stalled_foreign_commit_keeps_fences_conservative(spark, tmp_path):
     assert a._cache_epoch != a._read_watermark()
     res = a.append("s", new_events(1, prefix="a2"))
     assert res.last_revision == 4  # continues after b's rev 3
+
+
+def test_stalled_foreign_rows_stay_out_of_a_stream_read(spark, tmp_path):
+    """An unbounded stream read is the stream as of the head this
+    instance synced. With a foreign writer's row published but not
+    advertised, the read returns revisions 0..synced head in either
+    direction: its ``revision <= head`` predicate keeps the top-k limit
+    from sliding a backwards window past the oldest event."""
+    from eventstorm_spark.model import Direction
+    from tests.fixtures import new_events
+
+    p = str(tmp_path / "log")
+    a = EventLog(spark, p)
+    a.append("s", new_events(3, prefix="a"))   # revs 0..2
+    b = EventLog(spark, p)
+    b._advance_watermark = lambda pos: b._read_watermark()  # stall model
+    b.append("s", new_events(1, prefix="b"))   # rev 3, unadvertised
+
+    def revs(log, direction):
+        return [r.revision for r in
+                log.read_stream("s", direction=direction).collect()]
+
+    assert a.head_revision("s") == 2
+    assert revs(a, Direction.FORWARDS) == [0, 1, 2]
+    assert revs(a, Direction.BACKWARDS) == [2, 1, 0]
+    cold = EventLog(spark, p)   # reads the head from the table
+    assert revs(cold, Direction.BACKWARDS) == [3, 2, 1, 0]
+
+
+def _warm_pair(spark, tmp_path):
+    """Instance ``a`` with warm heads, tail, uuid index, deletions and
+    metadata caches for streams s (revs 0..1) and x (soft-deleted), and
+    a second instance ``b`` on the same path."""
+    from tests.fixtures import new_events
+
+    path = str(tmp_path / "log")
+    a = EventLog(spark, path)
+    a.append("s", new_events(2, prefix="s"))
+    a.append("x", new_events(1, prefix="x"))
+    a.delete_stream("x")
+    assert a.read_stream("s").count() == 2  # deletions + metadata probes
+    assert a.get_stream_metadata("s") == {}
+    assert "s" in a._uuids and a._revisions["s"] == 1
+    assert a._deletions is not None and a._has_meta_streams is False
+    return a, EventLog(spark, path)
+
+
+def test_foreign_append_is_folded_into_warm_caches(spark, tmp_path):
+    """A foreign commit moves the clock by its rows only: one scan of
+    those positions advances the cached head, tail and uuid set, and
+    the caches its rows do not touch (deletions, metadata) survive."""
+    from eventstorm_spark.errors import ConflictError
+    from tests.test_append import _count_jobs
+    from tests.fixtures import new_events
+
+    a, b = _warm_pair(spark, tmp_path)
+    dels, tail = a._deletions, a.tail_position()
+    dup = new_events(1, prefix="b")
+    b.append("s", dup)
+    assert _count_jobs(spark, a._sync_caches) == 1
+    assert a._cache_epoch == a._read_watermark() == tail + 1
+    assert a._revisions["s"] == 2 and a._tail_position == tail + 1
+    assert dup[0].uuid in a._uuids["s"]
+    assert a._deletions is dels and a._has_meta_streams is False
+    with pytest.raises(ConflictError):
+        a.append("s", dup)
+    assert a.append("s", new_events(1, prefix="a")).last_revision == 3
+    assert [r.revision for r in a.read_stream("s").collect()] == [0, 1, 2, 3]
+
+
+def test_folded_delete_and_tombstone_are_seen(spark, tmp_path):
+    """A $deleted-streams row in the folded gap drops the deletions
+    cache, so the next read and append see another instance's soft
+    delete and tombstone."""
+    from eventstorm_spark.errors import StreamDeletedError, StreamNotFoundError
+    from tests.fixtures import new_events
+
+    a, b = _warm_pair(spark, tmp_path)
+    a.append("t", new_events(1, prefix="t"))
+    b.delete_stream("s")
+    with pytest.raises(StreamNotFoundError):
+        a.read_stream("s")
+    assert a.append("s", new_events(1, prefix="r")).last_revision == 2
+    b.tombstone_stream("t")
+    with pytest.raises(StreamDeletedError):
+        a.append("t", new_events(1, prefix="t2"))
+    with pytest.raises(StreamDeletedError):
+        a.read_stream("t")
+
+
+def test_folded_metadata_is_seen(spark, tmp_path):
+    """A $$ row in the folded gap drops the metadata caches, so another
+    instance's $maxCount applies to the next read and lookup."""
+    a, b = _warm_pair(spark, tmp_path)
+    b.set_stream_metadata("s", max_count=1)
+    assert a.get_stream_metadata("s") == {"$maxCount": 1}
+    assert [r.revision for r in a.read_stream("s").collect()] == [1]
+
+
+def _assert_dropped(log):
+    assert log._tail_position is None and not log._revisions
+    assert not log._uuids and log._uuid_count == 0
+    assert log._deletions is None and log._deletions_df is None
+    assert not log._stream_meta and log._has_meta_streams is None
+
+
+def test_wide_foreign_gap_drops_every_cache(spark, tmp_path, monkeypatch):
+    """A clock advance wider than the fold's row cap is not scanned: the
+    sync drops every cache and the next lookups re-read the table."""
+    from eventstorm_spark.log import store
+    from tests.fixtures import new_events
+
+    a, b = _warm_pair(spark, tmp_path)
+    monkeypatch.setattr(store, "_FOLD_ROW_CAP", 1)
+    b.append("s", new_events(2, prefix="b"))
+    a._sync_caches()
+    assert a._cache_epoch == a._read_watermark()
+    _assert_dropped(a)
+    assert a.append("s", new_events(1, prefix="a")).last_revision == 4
+
+
+def test_gap_missing_a_position_drops_every_cache(spark, tmp_path,
+                                                  monkeypatch):
+    """The fold trusts the gap only when it holds every advertised
+    position exactly once: a scan that misses one position (here it
+    returns another row twice instead) drops every cache."""
+    from pyspark.sql import functions as F
+
+    from tests.fixtures import new_events
+
+    a, b = _warm_pair(spark, tmp_path)
+    tail = a.tail_position()
+    b.append("s", new_events(2, prefix="b"))  # positions tail+1, tail+2
+    real = a.df
+    monkeypatch.setattr(a, "df", lambda: real().where(
+        F.col("position") != tail + 1).unionByName(
+        real().where(F.col("position") == tail + 2)))
+    a._sync_caches()
+    monkeypatch.undo()
+    assert a._cache_epoch == a._read_watermark()
+    _assert_dropped(a)
+    assert a.append("s", new_events(1, prefix="a")).last_revision == 4
 
 
 def test_materialize_on_delta_log_goes_through_transaction_log(spark, tmp_path):

@@ -135,3 +135,55 @@ def test_all_start_backwards_is_first(all100):
     df = read_all(all100, BoundaryKind.START, Direction.BACKWARDS)
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["position"] == 1
+
+
+# -- EventLog.read: an unbounded stream read is a top-k at the head -------
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture()
+def log3(spark, tmp_path):
+    from eventstorm_spark.log.store import EventLog
+    from tests.fixtures import new_events
+
+    log = EventLog(spark, str(tmp_path / "log"))
+    log.append("s", new_events(3, prefix="s"))
+    log.append("other", new_events(2, prefix="o"))
+    return log
+
+
+def test_unbounded_stream_read_is_topk_not_sort(log3):
+    """A full stream read is bounded by the synced head (``revision <=
+    head``, limit ``head + 1``), so it plans as one TakeOrderedAndProject
+    instead of a range-partitioned global sort."""
+    for direction in (Direction.FORWARDS, Direction.BACKWARDS):
+        plan = _plan(log3.read_stream("s", direction=direction))
+        assert "TakeOrderedAndProject" in plan
+        assert "rangepartitioning" not in plan
+        assert "(revision" in plan and "<= 2" in plan
+
+
+def test_stream_above_topk_bound_keeps_the_sort(log3, monkeypatch):
+    """Past ``_TOPK_STREAM_ROWS`` the read keeps the distributed sort
+    (a top-k neither spills nor stays distributed), still bounded by
+    the head predicate."""
+    from eventstorm_spark.log import store
+
+    monkeypatch.setattr(store, "_TOPK_STREAM_ROWS", 2)
+    df = log3.read_stream("s")
+    plan = _plan(df)
+    assert "TakeOrderedAndProject" not in plan
+    assert "rangepartitioning" in plan and "<= 2" in plan
+    assert revs(df) == [0, 1, 2]
+
+
+def test_backwards_full_stream_read_returns_every_revision(log3):
+    """The head + 1 limit never cuts a full read short, in either
+    direction or from an explicit revision."""
+    assert revs(log3.read_stream("s", direction=Direction.BACKWARDS)) == [2, 1, 0]
+    assert revs(log3.read_stream("s")) == [0, 1, 2]
+    assert revs(log3.read_stream("s", direction=Direction.BACKWARDS,
+                                 from_revision=1)) == [1, 0]
+    assert revs(log3.read_stream("s", from_revision=1)) == [1, 2]

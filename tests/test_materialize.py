@@ -109,6 +109,22 @@ def test_state_of_point_lookup(log, tmp_path):
     assert json.loads(m.state_of("user-1")) == {"n": 7}
 
 
+def test_refresh_and_state_of_job_counts(spark, log, tmp_path):
+    """The state table is read with its known schema, so neither
+    ``state()`` nor ``state_of`` runs a schema-inference job: a point
+    lookup is one job, and an incremental refresh over a cached tail
+    runs at most three."""
+    from tests.test_append import _count_jobs
+
+    m = Materializer(log, _spec(), str(tmp_path / "state"))
+    m.refresh()
+    log.append("user-1", new_events(2, prefix="z"))
+    assert _count_jobs(spark, m.state) == 0
+    assert _count_jobs(spark, m.refresh) <= 3
+    assert _count_jobs(spark, lambda: m.state_of("user-1")) == 1
+    assert json.loads(m.state_of("user-1")) == {"n": 7}
+
+
 def test_result_of_reads_result_stream_tail(spark, tmp_path):
     """Result(name, partition) analogue (projections.proto:128-139):
     the LATEST emitted state for a partition on the projection's
