@@ -17,8 +17,9 @@ re-established here as a *single-writer commit discipline*:
   index: the first duplicate-checked append to a stream in a cache
   epoch loads the stream's uuids (and its head) in one pruned scan, own
   commits write through, a foreign commit's rows are folded in by one
-  scan of the positions it advertised, and ``scavenge()`` drops it;
-  the duplicate check itself runs no Spark job;
+  scan of the positions it advertised, and a ``scavenge()`` or
+  ``compact()`` rewrite (by any instance) drops it; the duplicate check
+  itself runs no Spark job;
 - every remaining lookup (a head, the tail, a stream read) is one Spark
   job: point lookups are top-1 sorts, and an unbounded stream read is a
   top-k bounded by the head this instance synced;
@@ -129,7 +130,8 @@ _FOLD_ROW_CAP = 10_000
 # fresh plan per read): the top-k read was faster at every size tried,
 # 0.29 vs 0.47 s at 500 rows and 1.06 vs 1.32 s at 100k, and 100k
 # envelope rows with small payloads hold ~38 MB (SizeEstimator, ~380 B
-# per row).
+# per row). So the bound is a memory guard, not a measured cut-over: no
+# benchmark workload reads a stream anywhere near it.
 _TOPK_STREAM_ROWS = 100_000
 
 
@@ -178,10 +180,14 @@ class EventLog:
     Own commits write through and move the epoch with them. When
     another writer moves the watermark, ``_sync_caches`` folds the rows
     it advertised into the caches with one pruned scan; it drops them
-    all only when the gap cannot be folded (no epoch yet, a rewrite, a
-    gap wider than ``_FOLD_ROW_CAP`` or with a missing position, or
-    ``format="delta"``), and ``scavenge()`` drops them after its
-    rewrite. A stream's uuid set is loaded by its first
+    all only when the gap cannot be folded (no epoch yet, no tail
+    cached, a rewrite, a gap wider than ``_FOLD_ROW_CAP`` or with a
+    missing position, or ``format="delta"``). A ``compact()`` or
+    ``scavenge()`` rewrite publishes a new rewrite mark beside the
+    watermark, so every instance drops its caches at its next sync. A
+    fresh tail read above the epoch (a writer published but has not
+    advertised yet) drops the caches loaded before it, so cached heads
+    never lag the cached tail. A stream's uuid set is loaded by its first
     duplicate-checked append in an epoch (one scan that also yields its
     head), and at most ``_UUID_INDEX_BUDGET`` uuids stay cached.
     """
@@ -224,6 +230,8 @@ class EventLog:
         # commit-clock reading every cache above was populated under
         # (see _sync_caches); None = not synced yet
         self._cache_epoch: Optional[int] = None
+        # rewrite mark (see _read_rewrite_mark) read with that epoch
+        self._cache_rewrite: Optional[str] = None
         # fixed clock for $maxAge retention (tests/replays); None = now
         self.retention_clock = None
 
@@ -234,6 +242,21 @@ class EventLog:
 
     def _watermark_path(self) -> str:
         return os.path.join(self._commits_dir(), "_watermark")
+
+    def _rewrite_path(self) -> str:
+        return os.path.join(self._commits_dir(), "_rewrite")
+
+    def _read_rewrite_mark(self) -> str:
+        """Token of the last ``compact``/``scavenge`` rewrite ("" = none
+        since ``_commits/`` was created). A rewrite restores the
+        watermark to the same tail, so the watermark alone cannot show
+        it; a changed mark makes every other instance drop its caches
+        (reclaimed uuids must be appendable again)."""
+        try:
+            with open(self._rewrite_path()) as f:
+                return f.read().strip()
+        except OSError:
+            return ""
 
     def _read_watermark(self) -> int:
         """Highest position known committed (lower bound — monotonic)."""
@@ -493,7 +516,14 @@ class EventLog:
         cache epoch first, so another writer's commit is seen."""
         self._sync_caches()
         if self._tail_position is None:
-            self._tail_position = self._newest(self.df(), "position") or 0
+            tail = self._newest(self.df(), "position") or 0
+            if self.format != "delta" and tail > (self._cache_epoch or 0):
+                # rows above the synced watermark (a writer that
+                # published but has not advertised yet) may be missing
+                # from caches loaded before this read: drop them, so
+                # every head and uuid set is read after this tail
+                self._drop_caches()
+            self._tail_position = tail
         return self._tail_position
 
     # -- append path ------------------------------------------------------
@@ -537,9 +567,10 @@ class EventLog:
         with one pruned scan and brings the caches forward: one job
         instead of a rescan per cache. The caches are dropped instead
         (the next lookups re-read the table) when there is no epoch yet,
-        the clock went backwards (a rewrite), the gap is wider than
-        ``_FOLD_ROW_CAP`` or misses a position, or the log is Delta,
-        whose clock is a version, not a position.
+        no tail is cached, the clock went backwards or the rewrite mark
+        changed (a ``compact``/``scavenge`` rewrite), the gap is wider
+        than ``_FOLD_ROW_CAP`` or misses a position, or the log is
+        Delta, whose clock is a version, not a position.
 
         On the append path the CAS head read and the position-reserve
         tail read are separate jobs; if another process's commit
@@ -551,8 +582,11 @@ class EventLog:
         tail-before-head read order in ``append_multi`` this closes
         every interleaving: a commit invisible to the tail read blocks
         the reserve; one visible to it is visible to the later head
-        reads too). A fold keeps that order: it never raises the tail
-        past the heads it brings forward. Under delta the
+        reads too). So a cached tail vouches for every cached head and
+        uuid set: they cover every row at or below it. A fresh tail
+        read above the epoch drops the caches loaded before it
+        (``tail_position``), and a fold runs only with a tail cached,
+        raising it with the heads it brings forward. Under delta the
         position-overlap validation only rejects a stale tail, so the
         version clock is what keeps a stale per-stream head from
         committing duplicate (stream, revision) pairs.
@@ -563,17 +597,20 @@ class EventLog:
         with self._lock:
             if self.format == "delta":
                 from eventstorm_spark.log.delta import current_version
-                clock = current_version(self.path)
+                clock, mark = current_version(self.path), None
             else:
-                clock = self._read_watermark()
+                clock, mark = self._read_watermark(), self._read_rewrite_mark()
             epoch = self._cache_epoch
-            if clock == epoch:
+            if clock == epoch and mark == self._cache_rewrite:
                 return
             if not (self.format != "delta" and epoch is not None
+                    and mark == self._cache_rewrite
+                    and self._tail_position is not None
                     and 0 < clock - epoch <= _FOLD_ROW_CAP
                     and self._fold(epoch, clock)):
                 self._drop_caches()
             self._cache_epoch = clock
+            self._cache_rewrite = mark
 
     def _fold(self, lo: int, hi: int) -> bool:
         """Bring the caches from epoch ``lo`` to watermark ``hi`` with the
@@ -582,11 +619,11 @@ class EventLog:
         positions, e.g. after a rewrite. A cached head moves to the
         gap's newest revision of its stream (max: a head loaded past
         the old epoch may already be newer); uncached heads stay
-        uncached, since a head set from the gap alone could miss rows a
-        later, higher tail read sees. The tail only moves up, and only
-        when cached, so a forced fresh tail read stays fresh. Loaded
-        uuid sets gain their streams' uuids, and the deletions and
-        metadata caches go only if the gap touches their streams."""
+        uncached, since a head set from the gap alone misses the
+        stream's older rows. The cached tail (the caller requires one)
+        only moves up. Loaded uuid sets gain their streams' uuids, and
+        the deletions and metadata caches go only if the gap touches
+        their streams."""
         rows = (self.df()
                 .where((F.col("position") > lo) & (F.col("position") <= hi))
                 .select("stream", "uuid", "revision", "position").collect())
@@ -604,8 +641,7 @@ class EventLog:
             if stream in self._revisions:
                 cur = self._revisions[stream]
                 self._revisions[stream] = rev if cur is None else max(cur, rev)
-        if self._tail_position is not None:
-            self._tail_position = max(self._tail_position, hi)
+        self._tail_position = max(self._tail_position, hi)
         self._drop_stale(newest)
         self._trim_uuid_index()
         return True
@@ -704,9 +740,10 @@ class EventLog:
         reserve, a tripped fence or an error adds nothing. Another
         writer's uuids join the loaded sets when the next sync folds its
         commit; the index is dropped with the other caches only when
-        that sync cannot fold (see ``_sync_caches``) or ``scavenge()``
-        rewrites the log. After a foreign commit the next append pays
-        one fold scan plus its write.
+        that sync cannot fold (see ``_sync_caches``), when a fresh tail
+        read finds unadvertised rows, or after any instance's
+        ``scavenge()`` or ``compact()`` rewrite. After a foreign commit
+        the next append pays one fold scan plus its write.
         """
         if not requests:
             raise ValueError("append_multi requires at least one request")
@@ -1491,6 +1528,17 @@ class EventLog:
     def _restore_watermark_after_rewrite(self) -> None:
         """A directory-overwrite rewrite (compact/scavenge) destroys
         ``_commits/`` and with it the watermark; re-backfill it from the
-        freshly-read tail so the cache epoch keeps working."""
+        freshly-read tail so the cache epoch keeps working, and publish
+        a new rewrite mark so other instances' next sync drops their
+        caches (see ``_read_rewrite_mark``)."""
+        import uuid as _uuid
+
+        os.makedirs(self._commits_dir(), exist_ok=True)
+        tmp = self._rewrite_path() + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(_uuid.uuid4().hex)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._rewrite_path())
         self._watermark_checked = False
         self._ensure_watermark()

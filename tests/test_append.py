@@ -682,6 +682,33 @@ def test_soft_deleted_uuid_is_reclaimed_by_scavenge(spark, tmp_path, warm):
     assert uuids.count(old[0].uuid) == 1
 
 
+@pytest.mark.parametrize("then_append", [False, True],
+                         ids=["scavenge_only", "scavenge_then_append"])
+def test_another_instances_scavenge_reclaims_uuids(spark, tmp_path,
+                                                   then_append):
+    """Another instance's scavenge() keeps the watermark where it was,
+    so its rewrite mark is what tells this instance to drop its uuid
+    index: the reclaimed uuid appends again, whether or not a later
+    commit moves the watermark (a fold alone would keep the uuid)."""
+    path = str(tmp_path / "log")
+    a = EventLog(spark, path)
+    old = new_events(2, prefix="old")
+    a.append("s", old)
+    a.delete_stream("s")
+    with pytest.raises(ConflictError):
+        a.append("s", old[:1])
+    assert old[0].uuid in a._uuids["s"]
+
+    b = EventLog(spark, path)
+    assert b.scavenge() == 2
+    if then_append:
+        b.append("z", new_events(1, prefix="z"))
+    res = a.append("s", old[:1])
+    assert res.last_revision == 2  # numbering continues after the delete
+    uuids = [r.uuid for r in a.read_stream("s").collect()]
+    assert uuids == [old[0].uuid]
+
+
 @pytest.mark.parametrize("warm", [True, False], ids=["warm_index", "cold_index"])
 def test_events_append_after_a_failed_publish(spark, tmp_path, warm):
     """A tripped fence (_publish_rows returns False) adds nothing to the

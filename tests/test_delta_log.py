@@ -238,6 +238,58 @@ def test_stalled_foreign_rows_stay_out_of_a_stream_read(spark, tmp_path):
     assert revs(cold, Direction.BACKWARDS) == [3, 2, 1, 0]
 
 
+def _stalled_writer(spark, path):
+    """A second instance whose appends publish their rows but never
+    advertise them (a writer stalled before its watermark advance)."""
+    c = EventLog(spark, path)
+    c._advance_watermark = lambda pos: c._read_watermark()
+    return c
+
+
+def test_fold_without_a_cached_tail_drops_every_cache(spark, tmp_path):
+    """A head cached while no tail is cached may be older than rows a
+    later fresh tail read sees (a stalled writer's, published above the
+    watermark). So a foreign commit is folded only with a tail cached:
+    here it drops every cache without a scan, and the append re-reads
+    the head after the tail instead of reusing a revision."""
+    from tests.test_append import _count_jobs
+    from tests.fixtures import new_events
+
+    p = str(tmp_path / "log")
+    EventLog(spark, p).append("s", new_events(3, prefix="w"))  # revs 0..2
+    a = EventLog(spark, p)
+    assert a.read_stream("s").count() == 3
+    assert a._revisions["s"] == 2 and a._tail_position is None
+    EventLog(spark, p).append("s", new_events(1, prefix="b"))  # rev 3
+    _stalled_writer(spark, p).append("s", new_events(1, prefix="c"))  # rev 4
+    assert _count_jobs(spark, a._sync_caches) == 0
+    _assert_dropped(a)
+    res = a.append("s", new_events(1, prefix="a"), check_duplicates=False)
+    assert res.last_revision == 5
+    revs = sorted(r.revision for r in a.df().where("stream = 's'").collect())
+    assert revs == [0, 1, 2, 3, 4, 5]
+
+
+def test_fresh_tail_read_drops_heads_cached_before_it(spark, tmp_path):
+    """With the watermark unmoved, a fresh tail read that lands above
+    the epoch has seen a stalled writer's rows, which a head cached
+    before it misses: the read drops the caches, so the append CASes
+    against the live head and never reuses a revision."""
+    from tests.fixtures import new_events
+
+    p = str(tmp_path / "log")
+    EventLog(spark, p).append("s", new_events(3, prefix="w"))  # revs 0..2
+    a = EventLog(spark, p)
+    assert a.head_revision("s") == 2 and a._tail_position is None
+    _stalled_writer(spark, p).append("s", new_events(1, prefix="c"))  # rev 3
+    assert a.tail_position() == 4
+    assert "s" not in a._revisions
+    res = a.append("s", new_events(1, prefix="a"), check_duplicates=False)
+    assert res.last_revision == 4
+    revs = sorted(r.revision for r in a.df().where("stream = 's'").collect())
+    assert revs == [0, 1, 2, 3, 4]
+
+
 def _warm_pair(spark, tmp_path):
     """Instance ``a`` with warm heads, tail, uuid index, deletions and
     metadata caches for streams s (revs 0..1) and x (soft-deleted), and
