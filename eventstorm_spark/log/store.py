@@ -6,9 +6,13 @@ the envelope schema. The protocol invariants the reference gets from
 Postgres (BIGSERIAL positions, UNIQUE(stream, revision),
 PRIMARY KEY(stream, uuid), transactional multi-event append with an
 expected-revision guard — ``internal/streams/streams.go:93-189``) are
-re-established here as a *single-writer commit discipline*:
+re-established here as a *single-writer commit discipline*, written
+once, in ``EventLog._commit``:
 
-- appends are serialized through a per-log lock; position is assigned as
+- every write (``append_multi``, ``delete_stream``, the bulk
+  ``append_frame``) is a stage of that one commit loop: under a per-log
+  lock it reads the tail, runs the caller's checks against heads read
+  after it, then reserves and publishes; position is assigned as
   ``tail + row_number-within-batch`` so the global log stays gapless and
   monotonic without any global recomputation;
 - per-stream head revisions are memoized in a read-through cache
@@ -25,7 +29,9 @@ re-established here as a *single-writer commit discipline*:
   top-k bounded by the head this instance synced;
 - the expected-revision CAS (streams.go:93-115) and event validation
   (streams.go:191-203) run before anything is written, so a failed append
-  writes nothing (the reference's tx-rollback equivalent).
+  writes nothing (the reference's tx-rollback equivalent), and the CAS
+  is decided in the same attempt as the reserve, so a commit that lands
+  in between re-runs it (the reference's one transaction).
 
 Scale story: one Parquet append per commit is exactly the Delta-Lake
 commit pattern minus the transaction log; on a cluster this class fronts a
@@ -74,7 +80,7 @@ from eventstorm_spark.model import (
 )
 
 
-def _now_ticks() -> int:
+def now_ticks() -> int:
     """100-ns ticks since epoch — streams.go:151 (UnixNano()/100)."""
     return time.time_ns() // 100
 
@@ -138,18 +144,22 @@ _TOPK_STREAM_ROWS = 100_000
 class EventLog:
     """A named event log over a Parquet directory.
 
-    Commit protocol: in-process appends serialize on a lock; ACROSS
-    processes the append is an optimistic commit — before writing, the
-    writer atomically reserves the batch's first position by creating
-    ``_commits/<position>`` (``open(..., 'x')``, the filesystem's
-    compare-and-swap). A second writer that raced to the same tail
-    loses the create, refreshes its tail/revision caches, re-runs the
-    expected-revision check against the new head, and retries at the
-    advanced position — exactly Delta Lake's optimistic-commit conflict
-    check re-expressed on a plain directory (with delta-spark installed,
-    ``format="delta"`` replaces ``_commits/`` with the Delta transaction
-    log — see ``delta.py``; the protocol below targets a real
-    rename-atomic filesystem, HDFS/POSIX).
+    Commit protocol: one loop, ``_commit``, makes every write; appends,
+    deletion markers and bulk link streams are stages of it. In-process
+    commits serialize on a lock; ACROSS processes each attempt is an
+    optimistic commit — the attempt reads the tail, the stage runs the
+    caller's checks against heads read after it and builds the batch,
+    and the writer then atomically reserves the batch's first position
+    by creating ``_commits/<position>`` (``open(..., 'x')``, the
+    filesystem's compare-and-swap). A commit the tail read missed
+    blocks that reserve. The loser drops its caches and runs the
+    attempt again — a fresh tail, the stage's checks against the new
+    heads, a reserve at the advanced position — exactly Delta Lake's
+    optimistic-commit conflict check re-expressed on a plain directory
+    (with delta-spark installed, ``format="delta"`` replaces
+    ``_commits/`` with the Delta transaction log — see ``delta.py``;
+    the protocol below targets a real rename-atomic filesystem,
+    HDFS/POSIX). ``_publish_rows`` is the one format dispatch.
 
     The commit is FENCED (not a bare grace-period lease):
 
@@ -579,7 +589,7 @@ class EventLog:
         CAS verdict and revision numbering were decided on stale data.
         Commits not yet watermarked still hold their position markers,
         so the reserve itself serializes those (together with the
-        tail-before-head read order in ``append_multi`` this closes
+        tail-before-head read order in ``_commit`` this closes
         every interleaving: a commit invisible to the tail read blocks
         the reserve; one visible to it is visible to the later head
         reads too). So a cached tail vouches for every cached head and
@@ -675,7 +685,7 @@ class EventLog:
         by ONE pruned scan per stream and cache epoch, which also caches
         the stream's head (None when absent): a first append pays one
         job for both. Own commits
-        add their uuids in ``append_multi``. Past ``_UUID_INDEX_BUDGET``
+        add their uuids in ``_stage_appends``. Past ``_UUID_INDEX_BUDGET``
         uuids, whole streams are evicted least recently used first —
         never the one returned, so a stream larger than the budget is
         held alone until the next load."""
@@ -717,38 +727,32 @@ class EventLog:
         (``streams.proto:204-307``, handler stub
         ``grpc_server.go:271-281``).
 
-        Every request is ``(stream, events, expected_revision)``. All
-        validations and expected-revision checks run first against the
-        current heads; if ANY fails, NOTHING is written (the whole batch
-        is one transaction). On success the batch commits as ONE fenced
+        Every request is ``(stream, events, expected_revision)``. Event
+        validation and the in-batch uuid check run first; the
+        expected-revision checks run as the stage of each commit
+        attempt (``_commit``), against heads read after the attempt's
+        tail. If ANY fails, NOTHING is written (the whole batch is one
+        transaction). On success the batch commits as ONE fenced
         parquet append covering every stream: positions are assigned
         densely across requests in order, per-stream revisions stay
         dense (a stream appearing twice in the batch continues its own
         numbering), and throughput scales with total batch size — N
         streams cost one commit, not N (SCALE.md §2).
 
-        Serialized through the log lock (the single-writer section,
-        SURVEY §7.4); across processes the position reserve is the
-        optimistic commit (see the class docstring).
-
         With ``check_duplicates`` (the default) a uuid already in the
         stream raises ``ConflictError``. The check is a lookup in the
-        per-stream uuid index: each attempt loads a stream's set (and
-        its head) with one pruned scan the first time the stream is
-        appended to in a cache epoch, after the attempt's tail read; a
-        published batch adds its uuids to every loaded set. A lost
-        reserve, a tripped fence or an error adds nothing. Another
-        writer's uuids join the loaded sets when the next sync folds its
-        commit; the index is dropped with the other caches only when
-        that sync cannot fold (see ``_sync_caches``), when a fresh tail
-        read finds unadvertised rows, or after any instance's
-        ``scavenge()`` or ``compact()`` rewrite. After a foreign commit
-        the next append pays one fold scan plus its write.
+        per-stream uuid index: an attempt loads a stream's set (and its
+        head) with one pruned scan the first time the stream is
+        appended to in a cache epoch; a published batch adds its uuids
+        to every loaded set. A lost reserve, a tripped fence or an error
+        adds nothing. Another writer's uuids join the loaded sets when
+        the next sync folds its commit; the index is dropped with the
+        other caches when that sync cannot fold (see ``_sync_caches``),
+        when a fresh tail read finds unadvertised rows, or after any
+        instance's ``scavenge()`` or ``compact()`` rewrite.
         """
         if not requests:
             raise ValueError("append_multi requires at least one request")
-        import uuid as _uuid
-
         for stream, events, _ in requests:
             if not events:
                 raise ValueError(f"empty event list for stream {stream!r}")
@@ -765,134 +769,176 @@ class EventLog:
                     raise ConflictError(
                         f"duplicate uuid in batch for stream {stream!r}: {ev.uuid}")
                 seen.add(key)
-        total = sum(len(events) for _, events, _ in requests)
-        marker_stream = requests[0][0] if len(requests) == 1 else "$multi"
+        label = requests[0][0] if len(requests) == 1 else "$multi"
+        return self._commit(label, lambda base_pos: self._stage_appends(
+            base_pos, requests, check_duplicates))
+
+    def _stage_appends(self, base_pos: int, requests, check_duplicates: bool):
+        """The commit stage of :meth:`append_multi`: CAS each request
+        against its stream's head (and uuid set), then build the rows at
+        positions ``base_pos + 1 ..``. ``done`` writes the heads, tail
+        and uuids through and returns the results."""
+        # batch-internal continuation for repeated streams (the second
+        # request sees the first's revisions)
+        heads: dict[str, int] = {}
+        held: dict[str, set] = {}  # stream -> its uuid set
+        firsts: list[int] = []  # head before each request
+        for stream, events, expected in requests:
+            if stream not in heads:
+                if check_duplicates:
+                    # loads the head too: one scan, not two
+                    held[stream] = self._stream_uuids(stream)
+                cur, kind = self._effective_head(stream)
+                if kind == "tombstoned":
+                    raise StreamDeletedError(stream)
+                heads[stream] = -1 if cur is None else cur
+            cur = heads[stream] if heads[stream] >= 0 else None
+            self._check_revision(expected, cur, stream)
+            if check_duplicates and not held[stream].isdisjoint(
+                    ev.uuid for ev in events):
+                raise ConflictError(f"duplicate uuid in stream {stream!r}")
+            firsts.append(heads[stream])
+            heads[stream] += len(events)
+
+        ticks = now_ticks()
+        rows: list = []
+        results: list[AppendResult] = []
+        pos = base_pos
+        for (stream, events, _), rev in zip(requests, firsts):
+            results.append(AppendResult(
+                stream=stream, first_position=pos + 1,
+                last_revision=rev + len(events), count=len(events)))
+            for ev in events:
+                meta = dict(ev.metadata)
+                meta[META_TYPE] = ev.event_type
+                meta[META_CONTENT_TYPE] = ev.content_type
+                meta[META_CREATED] = str(ticks)
+                rev += 1
+                pos += 1
+                rows.append((stream, ev.uuid, ev.data, meta,
+                             ev.custom_metadata, rev, pos,
+                             ev.event_type, ev.content_type, ticks))
+
+        def done() -> list[AppendResult]:
+            self._revisions.update(heads)
+            self._tail_position = pos
+            for stream, events, _ in requests:
+                loaded = self._uuids.get(stream)
+                if loaded is not None:
+                    n = len(loaded)
+                    loaded.update(ev.uuid for ev in events)
+                    self._uuid_count += len(loaded) - n
+            self._trim_uuid_index()
+            self._drop_stale(heads)
+            return results
+
+        return rows, len(rows), done
+
+    def append_frame(self, label: str, derive) -> int:
+        """Bulk append of a distributed envelope frame through
+        ``_commit`` (the ``projections.system`` link streams).
+        ``derive(tail)`` returns one attempt's ``(frame, rows)`` at
+        positions ``tail + 1 ..``, or None when there is nothing to
+        write. The frame is published file by file and not
+        duplicate-checked; every cache is dropped after it, since only
+        the frame knows which heads moved. Returns the rows written."""
+        def stage(base_pos: int):
+            derived = derive(base_pos)
+            if derived is None:
+                return None
+            frame, count = derived
+
+            def done() -> int:
+                self._drop_caches()
+                return count
+
+            return frame, count, done
+
+        return self._commit(label, stage) or 0
+
+    def _commit(self, label: str, stage):
+        """The one commit loop; every write to the log is a ``stage`` of
+        it. Under ``_lock`` and after the watermark backfill, an attempt
+        reads the tail (syncing the cache epoch) and runs
+        ``stage(tail)``: the caller's checks (CAS, tombstone,
+        duplicates) against heads read after that tail, where a raise
+        writes nothing. It returns ``(batch, count, done)`` for
+        positions ``tail + 1 ..`` (``done`` writes the caches through
+        after the publish and returns the caller's result), or None
+        when there is nothing to write. The attempt then reserves
+        ``tail + 1`` under ``label`` (parquet; a Delta commit is its own
+        conflict check) and publishes through ``_publish_rows``. A
+        commit the tail read missed blocks the reserve; one it saw is
+        visible to the stage's reads. A lost reserve, tripped fence or
+        lost Delta race drops the epoch and runs the attempt again; 200
+        lost attempts raise ``ConflictError``."""
+        import uuid as _uuid
 
         with self._lock:
             self._ensure_watermark()
             for _ in range(200):
-                # tail (which syncs the cache epoch) BEFORE the heads and
-                # uuid sets (see _sync_caches): a commit the tail read
-                # missed blocks the reserve; one it saw is visible to
-                # the later head and uuid reads
                 base_pos = self.tail_position()
-                # CAS every stream against its live head BEFORE writing
-                # anything (a failure raises: nothing written);
-                # batch-internal continuation for repeated streams (the
-                # second request sees the first's revisions)
-                heads: dict[str, int] = {}
-                held: dict[str, set] = {}  # stream -> its uuid set
-                firsts: list[int] = []  # head before each request
-                for stream, events, expected in requests:
-                    if stream not in heads:
-                        if check_duplicates:
-                            # loads the head too: one scan, not two
-                            held[stream] = self._stream_uuids(stream)
-                        cur, kind = self._effective_head(stream)
-                        if kind == "tombstoned":
-                            raise StreamDeletedError(stream)
-                        heads[stream] = -1 if cur is None else cur
-                    cur = heads[stream] if heads[stream] >= 0 else None
-                    self._check_revision(expected, cur, stream)
-                    if check_duplicates and not held[stream].isdisjoint(
-                            ev.uuid for ev in events):
-                        raise ConflictError(
-                            f"duplicate uuid in stream {stream!r}")
-                    firsts.append(heads[stream])
-                    heads[stream] += len(events)
-
+                staged = stage(base_pos)
+                if staged is None:
+                    return None
+                batch, count, done = staged
                 token = _uuid.uuid4().hex
                 marker = None
                 if self.format != "delta":
-                    marker = self._reserve(base_pos + 1, marker_stream,
-                                           total, token)
+                    marker = self._reserve(base_pos + 1, label, count, token)
                     if marker is None:
-                        # lost the optimistic race: another process
-                        # committed (or holds a live claim); re-validate
-                        # the CAS against the advanced log
+                        # another writer committed (or holds a live
+                        # claim) at our position
                         time.sleep(0.05)
                         self._cache_epoch = None
                         continue
-
-                ticks = _now_ticks()
-                rows: list = []
-                results: list[AppendResult] = []
-                pos = base_pos
-                for (stream, events, _), rev in zip(requests, firsts):
-                    results.append(AppendResult(
-                        stream=stream, first_position=pos + 1,
-                        last_revision=rev + len(events), count=len(events)))
-                    for ev in events:
-                        meta = dict(ev.metadata)
-                        meta[META_TYPE] = ev.event_type
-                        meta[META_CONTENT_TYPE] = ev.content_type
-                        meta[META_CREATED] = str(ticks)
-                        rev += 1
-                        pos += 1
-                        rows.append((stream, ev.uuid, ev.data, meta,
-                                     ev.custom_metadata, rev, pos,
-                                     ev.event_type, ev.content_type, ticks))
-
-                if self._publish_rows(rows, base_pos, marker, token):
-                    self._revisions.update(heads)
-                    self._tail_position = pos
-                    for stream, events, _ in requests:
-                        loaded = self._uuids.get(stream)
-                        if loaded is not None:
-                            n = len(loaded)
-                            loaded.update(ev.uuid for ev in events)
-                            self._uuid_count += len(loaded) - n
-                    self._trim_uuid_index()
-                    return results
-                # lost the Delta race, or the fence tripped (our claim
-                # was stolen during a pause beyond commit_grace_secs):
-                # nothing was published — refresh and redo the CAS
+                if self._publish_rows(batch, base_pos, marker, token, count):
+                    return done()
                 self._cache_epoch = None
             raise ConflictError(
                 f"commit contention on {self.path!r} (position "
                 f"{base_pos + 1} claimed, stolen or lost 200 times)")
 
-    def _publish_rows(self, rows: list, base_pos: int,
-                      marker: Optional[str], token: str) -> bool:
-        """Publish assembled envelope rows through the format's commit
-        path (Delta optimistic merge / fenced staged write + watermark),
-        then drop the caches the batch itself stales. False = lost race
-        or fence tripped; nothing published, caller retries its CAS.
-        Runs under ``_lock``."""
-        batch = local_frame(self.spark, rows, EVENT_SCHEMA)
+    def _publish_rows(self, rows, base_pos: int, marker: Optional[str],
+                      token: str, count: Optional[int] = None) -> bool:
+        """Publish one attempt's batch through the format's commit path
+        (Delta optimistic merge / fenced staged write + watermark).
+        ``rows`` is a list of envelope tuples, staged as one file so the
+        publish is one atomic rename, or a distributed envelope frame of
+        ``count`` rows, published file by file. False = lost race or
+        fence tripped; nothing published, the caller retries. Runs under
+        ``_lock``."""
+        local = isinstance(rows, list)
+        batch = local_frame(self.spark, rows, EVENT_SCHEMA) if local else rows
         if self.format == "delta":
             from eventstorm_spark.log import delta as _delta
-            if not _delta.append_batch(self.spark, self.path, batch):
-                return False
-        else:
-            if not self._fenced_write(batch, marker, token):
-                return False
-            # published: advertise the watermark FIRST, then GC markers
-            # at or below it (ours included — the watermark now carries
-            # the commit evidence).
-            top = base_pos + len(rows)
-            prev_wm = self._read_watermark()
-            wm = self._advance_watermark(top)
-            if wm == top and prev_wm == base_pos == self._cache_epoch:
-                # Own commit: move the epoch with it so the caches the
-                # caller is about to write survive the next sync
-                # (otherwise every append pays full-log rescans of the
-                # caches it just set). Only when our caches provably
-                # cover everything below the new watermark: (a) the
-                # pre-advance watermark still equals our epoch (no
-                # foreign commit ADVERTISED since the sync), AND (b)
-                # our base position equals it (no foreign commit
-                # PUBLISHED-but-unadvertised below us — a stalled
-                # writer's rows are visible to the tail read before its
-                # watermark moves, and an epoch past such rows would
-                # freeze a stale head cache forever: duplicate
-                # revisions / wrongly-passing CAS). Otherwise the epoch
-                # stays behind and the next sync folds every row above
-                # it, ours included, or drops every cache. Delta commits
-                # never move it: the next sync drops after every one.
-                self._cache_epoch = wm
-            self._gc_markers(wm)
-        self._drop_stale({r[0] for r in rows})
+            return _delta.append_batch(self.spark, self.path, batch)
+        if not self._fenced_write(batch, marker, token, single_file=local):
+            return False
+        # published: advertise the watermark FIRST, then GC markers at
+        # or below it (ours included — the watermark now carries the
+        # commit evidence).
+        top = base_pos + (len(rows) if local else count)
+        prev_wm = self._read_watermark()
+        wm = self._advance_watermark(top)
+        if wm == top and prev_wm == base_pos == self._cache_epoch:
+            # Own commit: move the epoch with it so the caches the
+            # caller is about to write survive the next sync (otherwise
+            # every append pays full-log rescans of the caches it just
+            # set). Only when our caches provably cover everything below
+            # the new watermark: (a) the pre-advance watermark still
+            # equals our epoch (no foreign commit ADVERTISED since the
+            # sync), AND (b) our base position equals it (no foreign
+            # commit PUBLISHED-but-unadvertised below us — a stalled
+            # writer's rows are visible to the tail read before its
+            # watermark moves, and an epoch past such rows would freeze
+            # a stale head cache forever: duplicate revisions /
+            # wrongly-passing CAS). Otherwise the epoch stays behind and
+            # the next sync folds every row above it, ours included, or
+            # drops every cache. Delta commits never move it: the next
+            # sync drops after every one.
+            self._cache_epoch = wm
+        self._gc_markers(wm)
         return True
 
     # -- deletion (S9 — stubs in the reference, grpc_server.go:271-281) ---
@@ -961,12 +1007,24 @@ class EventLog:
         """Hide logically-deleted history: broadcast left join against
         the deletions frame, keep rows past the per-stream bound (or
         from never-deleted streams). Same shape as the retention join
-        right below it in ``_resolution_envelope`` — the corpus never
-        shuffles."""
+        right below — the corpus never shuffles."""
         return (df.join(F.broadcast(delf), "stream", "left")
                 .where(F.col("__del_before").isNull()
                        | (F.col("position") > F.col("__del_before")))
                 .drop("__del_before"))
+
+    @staticmethod
+    def _apply_retention_filter(df: DataFrame, rt: DataFrame) -> DataFrame:
+        """Hide out-of-retention events: broadcast left join against the
+        retention frame (``_retention_frame``), keep rows at or above
+        the stream's revision floor and created cutoff (or from streams
+        with no retention metadata)."""
+        return (df.join(F.broadcast(rt), "stream", "left")
+                .where((F.col("__floor").isNull()
+                        | (F.col("revision") >= F.col("__floor")))
+                       & (F.col("__cutoff").isNull()
+                          | (F.col("created") >= F.col("__cutoff"))))
+                .drop("__floor", "__cutoff"))
 
     def _effective_head(self, stream: str) -> tuple:
         """(continuation-aware head revision, deletion kind): after a
@@ -995,31 +1053,41 @@ class EventLog:
         current tail; a later append recreates the stream with revision
         numbering continuing from the pre-delete head. Tombstone is
         permanent: further appends/reads raise StreamDeletedError.
+
+        The marker is a stage of ``_commit``: the CAS, its
+        ``before_position`` (the attempt's tail) and ``last_revision``
+        (the head read after it) are decided in the attempt that
+        reserves it, so a revision committed meanwhile re-runs them.
         """
-        # continuation-aware head: deleting an already-soft-deleted
-        # stream (possibly after scavenge reclaimed its rows) must
-        # carry the remembered pre-delete head forward, not reset the
-        # marker to last_revision=-1 — a later recreation append would
-        # otherwise restart revisions at 0 and re-issue numbers
-        # consumers already saw
-        current, kind = self._effective_head(stream)
-        if kind == "tombstoned":
-            raise StreamDeletedError(stream)
-        if current is None and kind is None:
-            raise StreamNotFoundError(stream)
-        self._check_revision(expected, current, stream)
         import json as _json
 
-        marker = NewEvent(
-            uuid=f"$del-{stream}-{self.tail_position()}",
-            event_type=TOMBSTONE_EVENT if tombstone else DELETE_EVENT,
-            data=_json.dumps({
-                "stream": stream,
-                "before_position": self.tail_position(),
-                "last_revision": -1 if current is None else current,
-            }),
-        )
-        return self.append(DELETED_STREAMS, [marker], check_duplicates=False)
+        def stage(base_pos: int):
+            # continuation-aware head: deleting an already-soft-deleted
+            # stream (possibly after scavenge reclaimed its rows) must
+            # carry the remembered pre-delete head forward, not reset
+            # the marker to last_revision=-1 — a later recreation append
+            # would otherwise restart revisions at 0 and re-issue
+            # numbers consumers already saw
+            current, kind = self._effective_head(stream)
+            if kind == "tombstoned":
+                raise StreamDeletedError(stream)
+            if current is None and kind is None:
+                raise StreamNotFoundError(stream)
+            self._check_revision(expected, current, stream)
+            marker = NewEvent(
+                uuid=f"$del-{stream}-{base_pos}",
+                event_type=TOMBSTONE_EVENT if tombstone else DELETE_EVENT,
+                data=_json.dumps({
+                    "stream": stream,
+                    "before_position": base_pos,
+                    "last_revision": -1 if current is None else current,
+                }),
+            )
+            return self._stage_appends(
+                base_pos, [(DELETED_STREAMS, [marker], ExpectedRevision.any())],
+                check_duplicates=False)
+
+        return self._commit(DELETED_STREAMS, stage)[0]
 
     def tombstone_stream(self, stream: str,
                          expected: ExpectedRevision = ExpectedRevision.any()) -> AppendResult:
@@ -1055,26 +1123,13 @@ class EventLog:
             if delf is not None:
                 kept = self._apply_deletion_filter(kept, delf)
             if rt is not None:
-                kept = (kept.join(F.broadcast(rt), "stream", "left")
-                        .where((F.col("__floor").isNull()
-                                | (F.col("revision") >= F.col("__floor")))
-                               & (F.col("__cutoff").isNull()
-                                  | (F.col("created") >= F.col("__cutoff"))))
-                        .drop("__floor", "__cutoff"))
+                kept = self._apply_retention_filter(kept, rt)
             removed = df.count() - kept.count()
             if removed == 0:
                 return 0
-            tmp = self.path.rstrip("/") + ".scavenge"
-            (kept.repartitionByRange(num_files, "position")
-             .sortWithinPartitions("position")
-             .write.mode("overwrite").parquet(tmp))
-            back = self.spark.read.schema(EVENT_SCHEMA).parquet(tmp)
-            back.write.mode("overwrite").parquet(self.path)
-            import shutil as _shutil
-            _shutil.rmtree(tmp, ignore_errors=True)  # full-size copy
-            # reclaimed uuids are appendable again: the index goes too
-            self._drop_caches()
-            self._restore_watermark_after_rewrite()
+            # reclaimed uuids are appendable again: the rewrite drops
+            # the index with the other caches
+            self._rewrite(kept, num_files)
             return removed
 
     # -- stream metadata / retention (EventStoreDB $$<stream>) ------------
@@ -1139,17 +1194,22 @@ class EventLog:
         self._stream_meta[stream] = body
         return dict(body)
 
-    def _retention_cutoff(self, meta: dict):
+    def _retention_cutoff(self, meta: dict, head: Optional[int]):
         """(revision_floor, created_cutoff_ticks) for a metadata body —
-        the two predicates retention filtering applies. ``$maxAge`` is
-        evaluated against ``retention_clock`` (or now) so tests and
-        replays can pin the clock; the cutoff converts to the
-        envelope's ``created`` unit (ticks = UnixNano/100, U5)."""
+        the two predicates retention filtering applies. The floor is the
+        higher of ``$tb`` and, for a stream whose head is ``head``, the
+        ``$maxCount`` floor. ``$maxAge`` is evaluated against
+        ``retention_clock`` (or now) so tests and replays can pin the
+        clock; the cutoff converts to the envelope's ``created`` unit
+        (ticks = UnixNano/100, U5)."""
         import datetime as _dt
 
         floor = None
         if "$tb" in meta:
             floor = int(meta["$tb"])
+        if "$maxCount" in meta and head is not None:
+            count_floor = head - int(meta["$maxCount"]) + 1
+            floor = count_floor if floor is None else max(floor, count_floor)
         cutoff = None
         if "$maxAge" in meta:
             now = self.retention_clock or _dt.datetime.now(_dt.timezone.utc)
@@ -1171,12 +1231,8 @@ class EventLog:
         meta = self.get_stream_metadata(sid)
         if not meta:
             return df
-        floor, cutoff = self._retention_cutoff(meta)
-        if "$maxCount" in meta:
-            head = self.head_revision(sid)
-            if head is not None:
-                count_floor = head - int(meta["$maxCount"]) + 1
-                floor = count_floor if floor is None else max(floor, count_floor)
+        head = self.head_revision(sid) if "$maxCount" in meta else None
+        floor, cutoff = self._retention_cutoff(meta, head)
         this_stream = F.col("stream") == sid
         if floor is not None and floor > 0:
             df = df.where(~(this_stream & (F.col("revision") < floor)))
@@ -1216,14 +1272,9 @@ class EventLog:
                       .groupBy("stream")
                       .agg(F.max("revision").alias("h")).collect()):
                 heads[r["stream"]] = int(r["h"])
-        rows = []
-        for sid, body in bodies.items():
-            floor, cutoff = self._retention_cutoff(body)
-            if "$maxCount" in body and sid in heads:
-                cf = heads[sid] - int(body["$maxCount"]) + 1
-                floor = cf if floor is None else max(floor, cf)
-            rows.append((sid, floor, cutoff))
-        return local_frame(self.spark, 
+        rows = [(sid, *self._retention_cutoff(body, heads.get(sid)))
+                for sid, body in bodies.items()]
+        return local_frame(self.spark,
             rows, "stream string, __floor long, __cutoff long")
 
     # -- links ------------------------------------------------------------
@@ -1269,12 +1320,7 @@ class EventLog:
         rt = (self._retention_frame() if retention_frame is _UNSET
               else retention_frame)
         if rt is not None:
-            df = (df.join(F.broadcast(rt), "stream", "left")
-                  .where((F.col("__floor").isNull()
-                          | (F.col("revision") >= F.col("__floor")))
-                         & (F.col("__cutoff").isNull()
-                            | (F.col("created") >= F.col("__cutoff"))))
-                  .drop("__floor", "__cutoff"))
+            df = self._apply_retention_filter(df, rt)
         return df
 
     @staticmethod
@@ -1404,12 +1450,7 @@ class EventLog:
             rt = self._retention_frame()
             rt_for_resolution = rt  # reuse below; rebuilding = 2 collects
             if rt is not None:
-                df = (df.join(F.broadcast(rt), "stream", "left")
-                      .where((F.col("__floor").isNull()
-                              | (F.col("revision") >= F.col("__floor")))
-                             & (F.col("__cutoff").isNull()
-                                | (F.col("created") >= F.col("__cutoff"))))
-                      .drop("__floor", "__cutoff"))
+                df = self._apply_retention_filter(df, rt)
         out = compile_read(df, opts)
         if opts.resolve_links:
             out = self.resolve_links(
@@ -1514,31 +1555,35 @@ class EventLog:
                 "use it (the parquet path's rewrite would bypass the "
                 "transaction log)")
         with self._lock:
-            df = (self.df().repartitionByRange(num_files, "position")
-                  .sortWithinPartitions("position"))
-            tmp = self.path.rstrip("/") + ".compact"
-            df.write.mode("overwrite").parquet(tmp)
-            back = self.spark.read.schema(EVENT_SCHEMA).parquet(tmp)
-            back.write.mode("overwrite").parquet(self.path)
-            import shutil as _shutil
-            _shutil.rmtree(tmp, ignore_errors=True)  # full-size copy
-            self._tail_position = None
-            self._restore_watermark_after_rewrite()
+            self._rewrite(self.df(), num_files)
 
-    def _restore_watermark_after_rewrite(self) -> None:
-        """A directory-overwrite rewrite (compact/scavenge) destroys
-        ``_commits/`` and with it the watermark; re-backfill it from the
-        freshly-read tail so the cache epoch keeps working, and publish
-        a new rewrite mark so other instances' next sync drops their
-        caches (see ``_read_rewrite_mark``)."""
+    def _rewrite(self, df: DataFrame, num_files: int) -> None:
+        """Replace the log with ``df`` in ``num_files`` position-sorted,
+        position-disjoint files (``compact``/``scavenge``; runs under
+        ``_lock``). The sorted copy is written beside the log, read back
+        and written over it, since Spark cannot overwrite a directory it
+        is reading. The overwrite destroys ``_commits/`` and with it the
+        watermark, so every cache is dropped, the watermark is
+        re-backfilled from the fresh tail, and a new rewrite mark makes
+        other instances' next sync drop their caches (see
+        ``_read_rewrite_mark``)."""
+        import shutil as _shutil
         import uuid as _uuid
 
+        tmp = self.path.rstrip("/") + ".rewrite"
+        (df.repartitionByRange(num_files, "position")
+         .sortWithinPartitions("position")
+         .write.mode("overwrite").parquet(tmp))
+        back = self.spark.read.schema(EVENT_SCHEMA).parquet(tmp)
+        back.write.mode("overwrite").parquet(self.path)
+        _shutil.rmtree(tmp, ignore_errors=True)  # full-size copy
+        self._drop_caches()
         os.makedirs(self._commits_dir(), exist_ok=True)
-        tmp = self._rewrite_path() + ".tmp"
-        with open(tmp, "w") as f:
+        mark = self._rewrite_path() + ".tmp"
+        with open(mark, "w") as f:
             f.write(_uuid.uuid4().hex)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp, self._rewrite_path())
+        os.replace(mark, self._rewrite_path())
         self._watermark_checked = False
         self._ensure_watermark()

@@ -240,17 +240,14 @@ def start_continuous(spec: Projection, log, *, checkpoint_dir: str | None = None
     """
     from pyspark.sql import functions as F
 
-    from eventstorm_spark.model import EVENT_SCHEMA, NewEvent
+    from eventstorm_spark.model import NewEvent
+    from eventstorm_spark.streaming.subscriptions import _stream_source
 
-    reader = log.spark.readStream.schema(EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        # backpressure: without it the FIRST catch-up micro-batch is the
-        # entire existing log, and a history with more distinct
-        # partitions than max_updates_per_batch trips the overflow
-        # guard spuriously (steady state never would)
-        reader = reader.option("maxFilesPerTrigger",
-                               int(max_files_per_trigger))
-    src = reader.parquet(log.path)
+    # backpressure: without it the FIRST catch-up micro-batch is the
+    # entire existing log, and a history with more distinct partitions
+    # than max_updates_per_batch trips the overflow guard spuriously
+    # (steady state never would)
+    src = _stream_source(log.spark, log.path, max_files_per_trigger)
     # result-stream events must not feed back into the fold
     src = src.where(F.col("stream") != spec.result_stream())
     updates = run_streaming(spec, src)

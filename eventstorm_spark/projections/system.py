@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from eventstorm_spark.log.store import LINK_EVENT
+from eventstorm_spark.log.store import LINK_EVENT, now_ticks
+from eventstorm_spark.model import META_CONTENT_TYPE, META_CREATED, META_TYPE
 
 # Default category separator. EventStoreDB's $by_category config defaults
 # to splitting on the FIRST '-' ("first" mode).
@@ -99,8 +100,10 @@ def materialize(events: DataFrame, log, which=None, *,
     """Append the system-projection link streams to the log (the durable
     form EventStoreDB maintains continuously).
 
-    Fully distributed — link rows never pass through the driver. Per
-    projection the plan is:
+    Fully distributed — link rows never pass through the driver. Each
+    projection is one bulk append (``EventLog.append_frame``) whose
+    batch is derived inside the log's commit loop, from the tail the
+    attempt read:
 
     1. dense per-link-stream revisions from the ``_links`` window,
        offset by the link stream's existing head revision (joined from
@@ -112,10 +115,12 @@ def materialize(events: DataFrame, log, which=None, *,
        both passes see identical partitioning), only the P per-partition
        *counts* come back to the driver, and each row's position is
        ``tail + prefix_offset(partition) + row_number_in_partition``;
-    3. one distributed Parquet append of the assembled envelope.
+    3. one distributed, multi-file Parquet publish of the assembled
+       envelope.
 
-    Driver-side state is O(partitions), not O(events). The commit is
-    serialized under the log's single-writer lock like every append.
+    Driver-side state is O(partitions), not O(events). A commit that
+    another writer wins (lost reserve, tripped fence, lost Delta race)
+    re-derives all three steps at the advanced tail, like every append.
     Link uuids are deterministic AND replay-stable
     (``name-stream-source_position`` — derived from the linked event's
     global position, never from the assigned revision, so a re-run
@@ -143,133 +148,76 @@ def materialize(events: DataFrame, log, which=None, *,
 def _append_links(log, name: str, links: DataFrame, *,
                   num_partitions: int | None = None) -> int:
     """Distributed bulk append of one projection's link rows (see
-    :func:`materialize`). Returns the number of rows written."""
-    from eventstorm_spark.log.store import _now_ticks
-    from eventstorm_spark.model import (
-        META_CONTENT_TYPE, META_CREATED, META_TYPE,
-    )
-
-    import uuid as _uuid
-
+    :func:`materialize`): ``derive`` is the commit stage
+    ``EventLog.append_frame`` runs once per attempt, after the
+    attempt's tail read, so the link-stream heads it joins cover every
+    commit below the positions it assigns. Returns the number of rows
+    written."""
     spark = links.sparkSession
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
 
-    with log._lock:
-        log._ensure_watermark()
-        attempts = 0
-        while True:
-            # Claim FIRST (same optimistic commit as EventLog.append),
-            # then derive everything — revision continuation included —
-            # UNDER the claim: a concurrent cross-process append can no
-            # longer advance the link-stream heads between the heads
-            # join and the write, so (stream, revision) stays unique.
-            base_pos = log.tail_position()
-            token = _uuid.uuid4().hex
-            marker = None
-            if log.format != "delta":
-                marker = log._reserve(base_pos + 1, name, -1, token)
-                if marker is None:
-                    attempts += 1
-                    if attempts > 200:
-                        raise RuntimeError(
-                            f"commit contention materializing {name} at "
-                            f"position {base_pos + 1}")
-                    import time as _time
-                    _time.sleep(0.05)
-                    log._tail_position = None
-                    continue
+    def derive(base_pos: int):
+        # (1) continue revision numbering from existing link-stream
+        # heads. Link streams all live under the '$' prefix, so the head
+        # scan prunes to system rows; AQE broadcasts the
+        # (stream-count-sized) head table into the join.
+        heads = (log.df().where(F.col("stream").startswith("$"))
+                 .groupBy("stream").agg(F.max("revision").alias("__head")))
+        linked = (links.join(heads, "stream", "left")
+                  .withColumn(
+                      "revision",
+                      (F.coalesce(F.col("__head") + 1, F.lit(0))
+                       + F.col("link_revision")).cast("long")))
 
-            # (1) continue revision numbering from existing link-stream
-            # heads. Link streams all live under the '$' prefix, so the
-            # head scan prunes to system rows; AQE broadcasts the
-            # (stream-count-sized) head table into the join.
-            heads = (log.df().where(F.col("stream").startswith("$"))
-                     .groupBy("stream").agg(F.max("revision").alias("__head")))
-            linked = (links.join(heads, "stream", "left")
-                      .withColumn(
-                          "revision",
-                          (F.coalesce(F.col("__head") + 1, F.lit(0))
-                           + F.col("link_revision")).cast("long")))
+        # (2) two-pass gapless position assignment. localCheckpoint pins
+        # the (sampled) range partitioning so the counts pass and the
+        # rank pass see the same partition ids.
+        part = (linked.repartitionByRange(n_parts, "stream", "link_revision")
+                .sortWithinPartitions("stream", "link_revision")
+                .withColumn("__pid", F.spark_partition_id())
+                .localCheckpoint(eager=True))
+        counts = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
+        if not counts:
+            return None
+        offsets: dict[int, int] = {}
+        run = 0
+        for r in sorted(counts, key=lambda r: r["__pid"]):
+            offsets[r["__pid"]] = run
+            run += r["c"]
+        off_map = F.create_map(
+            *[F.lit(v) for pid, off in offsets.items() for v in (pid, off)])
 
-            # (2) two-pass gapless position assignment. localCheckpoint
-            # pins the (sampled) range partitioning so the counts pass
-            # and the rank pass see the same partition ids.
-            part = (linked.repartitionByRange(n_parts, "stream", "link_revision")
-                    .sortWithinPartitions("stream", "link_revision")
-                    .withColumn("__pid", F.spark_partition_id())
-                    .localCheckpoint(eager=True))
-            counts = part.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
-            if not counts:
-                log._release(marker, token)
-                return 0
-            offsets: dict[int, int] = {}
-            run = 0
-            for r in sorted(counts, key=lambda r: r["__pid"]):
-                offsets[r["__pid"]] = run
-                run += r["c"]
-            n = run
-            off_map = F.create_map(
-                *[F.lit(v) for pid, off in offsets.items() for v in (pid, off)])
+        ticks = now_ticks()
+        w = W.partitionBy("__pid").orderBy("stream", "link_revision")
+        rank = (F.row_number().over(w) - 1).cast("long") + off_map[F.col("__pid")]
 
-            ticks = _now_ticks()
-            w = W.partitionBy("__pid").orderBy("stream", "link_revision")
-            rank = (F.row_number().over(w) - 1).cast("long") + off_map[F.col("__pid")]
+        env = part.select(
+            F.col("stream"),
+            # uuid from CONTENT (the linked event's global position):
+            # replay-stable — a re-run after a torn publish mints
+            # IDENTICAL uuids so uuid-dedupe can identify the
+            # already-landed rows (a revision-derived uuid would
+            # continue PAST the partial rows and mint fresh ones), and
+            # unique — a source event links into a given stream at most
+            # once per projection, and incremental tail batches carry
+            # strictly newer positions (unlike link_revision, which
+            # restarts at 0 per batch)
+            F.concat(F.lit(name + "-"), F.col("stream"), F.lit("-"),
+                     F.col("source_position").cast("string"))
+            .alias("uuid"),
+            F.col("data"),
+            F.create_map(
+                F.lit(META_TYPE), F.lit(LINK_EVENT),
+                F.lit(META_CONTENT_TYPE), F.lit("application/octet-stream"),
+                F.lit(META_CREATED), F.lit(str(ticks)),
+            ).alias("metadata"),
+            F.lit(None).cast("binary").alias("custom_metadata"),
+            F.col("revision"),
+            (F.lit(base_pos) + 1 + rank).cast("long").alias("position"),
+            F.lit(LINK_EVENT).alias("event_type"),
+            F.lit("application/octet-stream").alias("content_type"),
+            F.lit(ticks).alias("created"),
+        )
+        return env, run
 
-            env = part.select(
-                F.col("stream"),
-                # uuid from CONTENT (the linked event's global position):
-                # replay-stable — a re-run after a torn publish mints
-                # IDENTICAL uuids so uuid-dedupe can identify the
-                # already-landed rows (a revision-derived uuid would
-                # continue PAST the partial rows and mint fresh ones),
-                # and unique — a source event links into a given stream
-                # at most once per projection, and incremental tail
-                # batches carry strictly newer positions (unlike
-                # link_revision, which restarts at 0 per batch)
-                F.concat(F.lit(name + "-"), F.col("stream"), F.lit("-"),
-                         F.col("source_position").cast("string"))
-                .alias("uuid"),
-                F.col("data"),
-                F.create_map(
-                    F.lit(META_TYPE), F.lit(LINK_EVENT),
-                    F.lit(META_CONTENT_TYPE), F.lit("application/octet-stream"),
-                    F.lit(META_CREATED), F.lit(str(ticks)),
-                ).alias("metadata"),
-                F.lit(None).cast("binary").alias("custom_metadata"),
-                F.col("revision"),
-                (F.lit(base_pos) + 1 + rank).cast("long").alias("position"),
-                F.lit(LINK_EVENT).alias("event_type"),
-                F.lit("application/octet-stream").alias("content_type"),
-                F.lit(ticks).alias("created"),
-            )
-            if log.format == "delta":
-                # Delta-backed log: the bulk append MUST go through the
-                # transaction log (a direct parquet write into the table
-                # path bypasses the commit protocol — invisible to the
-                # shim's snapshot, corrupting under real Delta). False =
-                # lost the optimistic race: refresh and redo the whole
-                # derivation, same as a tripped fence.
-                from eventstorm_spark.log import delta as _delta
-                if _delta.append_batch(log.spark, log.path, env):
-                    break
-                attempts += 1
-                if attempts > 200:
-                    raise RuntimeError(
-                        f"commit contention materializing {name} on the "
-                        f"Delta log (position {base_pos + 1})")
-                log._tail_position = None
-                continue
-            if log._fenced_write(env, marker, token, single_file=False):
-                wm = log._advance_watermark(base_pos + n)
-                log._gc_markers(wm)
-                break
-            # fence tripped mid-write: refresh and redo the whole derivation
-            attempts += 1
-            if attempts > 200:
-                raise RuntimeError(
-                    f"commit contention materializing {name} (claim at "
-                    f"position {base_pos + 1} repeatedly stolen)")
-            log._tail_position = None
-        # the link streams' heads and uuid sets changed
-        log._drop_caches()
-        return n
+    return log.append_frame(name, derive)

@@ -169,7 +169,61 @@ class Delivered:
     checkpoints: list = field(default_factory=list)  # positions at checkpoint emission
 
 
-class Subscription:
+class _Driver:
+    """What both subscription kinds share: the resolveLinkTos upgrade,
+    the ``foreachBatch`` query start and the drain. Subclasses report
+    their delivered count through ``_progress``."""
+
+    def _unresolved(self, sub_df: DataFrame) -> DataFrame:
+        """resolveLinkTos upgrade: subscribe to the UNRESOLVED source
+        and resolve per micro-batch (fresh visibility, envelope pruned
+        by the batch's bounded target set — see _batch_resolver)
+        instead of running the marked frame's in-plan stream-static
+        join. Sets ``_resolve`` (None = no resolution) and returns the
+        frame to subscribe to."""
+        self._resolve = getattr(sub_df, "_es_resolve", None)
+        return sub_df if self._resolve is None else sub_df._es_unresolved
+
+    def _start(self, sub_df: DataFrame, on_batch,
+               checkpoint_dir: Optional[str]) -> None:
+        writer = (
+            sub_df.writeStream.outputMode("append")
+            .foreachBatch(on_batch)
+            .trigger(processingTime="200 milliseconds")
+        )
+        if checkpoint_dir:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        self._query = writer.start()
+
+    def _progress(self) -> int:
+        raise NotImplementedError
+
+    def process_available(self) -> None:
+        """Drain everything currently committed. The file source judges
+        "available" by its most recent directory listing, so a file
+        committed immediately before this call can miss that listing
+        (seen under heavy host load); drain until a listing round
+        delivers nothing new."""
+        import time as _time
+
+        prev = -1
+        for i in range(6):
+            if i:
+                # give the 200 ms trigger a fresh listing cycle between
+                # rounds — back-to-back processAllAvailable calls can
+                # both observe the same stale listing under host load
+                _time.sleep(0.25)
+            self._query.processAllAvailable()
+            n = self._progress()
+            if n == prev:
+                return
+            prev = n
+
+    def stop(self) -> None:
+        self._query.stop()
+
+
+class Subscription(_Driver):
     """A running subscription with reference-shaped delivery semantics.
 
     Wraps a streaming query over the subscription DataFrame; each
@@ -213,13 +267,7 @@ class Subscription:
 
         Subscription._seq += 1
         self.id = f"sub-{Subscription._seq}"
-        # resolveLinkTos upgrade: subscribe to the UNRESOLVED source and
-        # resolve per micro-batch (fresh visibility, envelope pruned by
-        # the batch's bounded target set — see _batch_resolver) instead
-        # of running the marked frame's in-plan stream-static join
-        self._resolve = getattr(sub_df, "_es_resolve", None)
-        if self._resolve is not None:
-            sub_df = sub_df._es_unresolved
+        sub_df = self._unresolved(sub_df)
         self.delivered = Delivered()
         self.confirmed = False  # SubscriptionConfirmation (grpc_server.go:84-122)
         self._checkpoint_every = checkpoint_every
@@ -270,39 +318,11 @@ class Subscription:
                                 "after": self._nsent}, f)
                 _os.replace(tmp, self._nsent_path)
 
-        writer = (
-            sub_df.writeStream.outputMode("append")
-            .foreachBatch(on_batch)
-            .trigger(processingTime="200 milliseconds")
-        )
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        self._query = writer.start()
+        self._start(sub_df, on_batch, checkpoint_dir)
         self.confirmed = True
 
-    def process_available(self) -> None:
-        """Drain everything currently committed. The file source judges
-        "available" by its most recent directory listing, so a file
-        committed immediately before this call can miss that listing
-        (seen under heavy host load); drain until a listing round
-        delivers nothing new."""
-        import time as _time
-
-        prev = -1
-        for i in range(6):
-            if i:
-                # give the 200 ms trigger a fresh listing cycle between
-                # rounds — back-to-back processAllAvailable calls can
-                # both observe the same stale listing under host load
-                _time.sleep(0.25)
-            self._query.processAllAvailable()
-            n = len(self.delivered.events)
-            if n == prev:
-                return
-            prev = n
-
-    def stop(self) -> None:
-        self._query.stop()
+    def _progress(self) -> int:
+        return len(self.delivered.events)
 
     @property
     def positions(self) -> list:
@@ -313,7 +333,7 @@ class Subscription:
         return [r["revision"] for r in self.delivered.events]
 
 
-class SinkSubscription:
+class SinkSubscription(_Driver):
     """Sink-mode delivery: each micro-batch is appended to a results
     table instead of a driver buffer — the scale path for catch-up over
     a log that does not fit in driver memory (the in-memory
@@ -363,12 +383,7 @@ class SinkSubscription:
 
         self.sink_path = sink_path
         self._spark = sub_df.sparkSession
-        # resolveLinkTos upgrade — same contract as Subscription:
-        # subscribe unresolved, resolve each micro-batch statically so
-        # the envelope prune engages (see _batch_resolver)
-        self._resolve = getattr(sub_df, "_es_resolve", None)
-        if self._resolve is not None:
-            sub_df = sub_df._es_unresolved
+        sub_df = self._unresolved(sub_df)
         self._delivered = self._existing_count()
         # Resume fence against rewritten source files: a compaction /
         # scavenge rewrites the log into NEW files, which the file
@@ -493,14 +508,10 @@ class SinkSubscription:
             self._delivered = max(self._delivered, base + cnt)
             self._max_seen_pos = max(self._max_seen_pos, int(stats["hi"]))
 
-        writer = (
-            sub_df.writeStream.outputMode("append")
-            .foreachBatch(on_batch)
-            .trigger(processingTime="200 milliseconds")
-        )
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        self._query = writer.start()
+        self._start(sub_df, on_batch, checkpoint_dir)
+
+    def _progress(self) -> int:
+        return self._delivered
 
     def _existing_count(self) -> int:
         try:
@@ -527,20 +538,6 @@ class SinkSubscription:
         except OSError:
             return -1
 
-    def process_available(self) -> None:
-        """Drain everything currently committed (same listing-staleness
-        guard as ``Subscription.process_available``)."""
-        import time as _time
-
-        prev = -1
-        for i in range(6):
-            if i:
-                _time.sleep(0.25)
-            self._query.processAllAvailable()
-            if self._delivered == prev:
-                return
-            prev = self._delivered
-
     def result(self) -> DataFrame:
         """The delivered table (envelope + delivery_seq + checkpoint),
         unordered — consumers ``orderBy('delivery_seq')`` to replay."""
@@ -554,6 +551,3 @@ class SinkSubscription:
                 + [T.StructField("delivery_seq", T.LongType(), False),
                    T.StructField("checkpoint", T.BooleanType(), False)])
             return local_frame(self._spark, [], schema)
-
-    def stop(self) -> None:
-        self._query.stop()

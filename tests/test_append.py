@@ -838,3 +838,21 @@ def test_appends_stay_dense_beside_readers_and_a_foreign_writer(spark, tmp_path)
         revs = sorted(r.revision for r in rows if r.stream == stream)
         assert revs == list(range(len(revs))), stream
     assert log.head_revision("f") == 2
+
+
+def test_commit_internals_stay_inside_the_log_package():
+    """Every write goes through EventLog's one commit loop: no module
+    outside ``eventstorm_spark/log/`` reaches the claim, publish or
+    watermark internals."""
+    import re
+    from pathlib import Path
+
+    import eventstorm_spark
+
+    internals = re.compile(r"\b(_reserve|_fenced_write|_advance_watermark"
+                           r"|_gc_markers|_release|_ensure_watermark)\b")
+    root = Path(eventstorm_spark.__file__).parent
+    offenders = [str(p.relative_to(root)) for p in sorted(root.rglob("*.py"))
+                 if p.relative_to(root).parts[0] != "log"
+                 and internals.search(p.read_text())]
+    assert offenders == []

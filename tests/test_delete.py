@@ -120,6 +120,61 @@ def test_redelete_after_scavenge_keeps_continuation(log):
     assert res.last_revision == 5         # continues, not 0
 
 
+def _race_after_first_head(a, b):
+    """Wrap instance ``a``'s ``_effective_head`` so that right after its
+    first lookup of "s" returns, instance ``b`` commits one event to
+    "s": a revision landing between a delete's check and its commit.
+    Returns the list that receives ``b``'s AppendResult."""
+    real = a._effective_head
+    raced = []
+
+    def effective_head(stream):
+        out = real(stream)
+        if stream == "s" and not raced:
+            raced.append(b.append("s", new_events(1, prefix="b")))
+        return out
+
+    a._effective_head = effective_head
+    return raced
+
+
+def test_delete_cas_sees_a_revision_committed_during_the_check(spark, tmp_path):
+    """The CAS is decided in the same commit attempt as the marker's
+    reserve: B's rev 3, committed after A read head 2, makes A's reserve
+    lose, and the re-run check against rev 3 fails. Nothing is
+    written."""
+    path = str(tmp_path / "log")
+    a, b = EventLog(spark, path), EventLog(spark, path)
+    a.append("s", new_events(3))  # revisions 0..2 at positions 1..3
+    raced = _race_after_first_head(a, b)
+    with pytest.raises(WrongExpectedRevisionError):
+        a.delete_stream("s", ExpectedRevision.at(2))
+    assert raced[0].last_revision == 3
+    assert a.df().where(f"stream = '{DELETED_STREAMS}'").count() == 0
+    assert a.read_stream("s").count() == 4
+
+
+def test_delete_marker_covers_a_revision_committed_during_the_check(
+        spark, tmp_path):
+    """With ``expected=any`` the marker's ``before_position`` and
+    ``last_revision`` come from one attempt: the marker that hides B's
+    rev 3 also records it, so a recreation after ``scavenge()`` (which
+    reclaims rev 3) continues at 4 instead of issuing 3 again."""
+    import json
+
+    path = str(tmp_path / "log")
+    a, b = EventLog(spark, path), EventLog(spark, path)
+    a.append("s", new_events(3))
+    _race_after_first_head(a, b)
+    a.delete_stream("s")
+    markers = a.df().where(f"stream = '{DELETED_STREAMS}'").collect()
+    assert [json.loads(r["data"]) for r in markers] == [
+        {"stream": "s", "before_position": 4, "last_revision": 3}]
+    assert a.scavenge() == 4
+    res = a.append("s", new_events(1, prefix="new"))
+    assert res.last_revision == 4
+
+
 def test_tombstone_visible_across_instances(spark, tmp_path):
     """Two EventLog instances on the same path (the multi-writer setup
     the marker commit protocol exists for): a tombstone committed

@@ -182,3 +182,54 @@ def test_materialize_uuids_replay_stable_and_unique(spark, tmp_path):
     uuids = [r["uuid"] for r in rows]
     assert len(rows) == 8
     assert len(set(uuids)) == 5  # 3 originals (each twice) + 2 new
+
+
+def test_materialize_rederives_after_losing_its_reserve(spark, tmp_path):
+    """Another instance's commit wins materialize's first reserve, after
+    the links were derived from the heads it read: the commit loop
+    re-derives them at the advanced tail. Positions stay gapless, link
+    revisions stay dense (continuing after the other instance's link),
+    and the link rows equal an uncontended run's."""
+    from pyspark.sql import functions as F
+
+    from eventstorm_spark.log.store import EventLog
+    from tests.fixtures import new_events
+
+    def build(path):
+        log = EventLog(spark, path)
+        for s in range(5):
+            log.append(f"acct-{s}", new_events(4, prefix=f"s{s}"))
+        return log, log.df()  # the source: the 20 events above
+
+    def links(log):
+        return sorted(
+            tuple(r) for r in log.df().where(F.col("stream").startswith("$"))
+            .select("stream", "revision", "position", "uuid", "data").collect())
+
+    calm, calm_src = build(str(tmp_path / "calm"))
+    calm.link_to("$ce-acct", "acct-0", 0)
+    materialize(calm_src, calm, which=["$by_category", "$streams"])
+
+    raced, raced_src = build(str(tmp_path / "raced"))
+    other = EventLog(spark, raced.path)
+    real = raced._reserve
+    won = []
+
+    def reserve(position, *args):
+        if not won:
+            other.link_to("$ce-acct", "acct-0", 0)  # lands at position 21
+        marker = real(position, *args)
+        won.append(marker is not None)
+        return marker
+
+    raced._reserve = reserve
+    n = materialize(raced_src, raced, which=["$by_category", "$streams"])
+    assert n == 20 + 5 and won == [False, True, True]
+
+    pos = sorted(r["position"] for r in raced.df().select("position").collect())
+    assert pos == list(range(1, 20 + 1 + n + 1))
+    revs = {}
+    for stream, rev, *_ in links(raced):
+        revs.setdefault(stream, []).append(rev)
+    assert revs == {"$ce-acct": list(range(21)), "$streams": list(range(5))}
+    assert links(raced) == links(calm)
